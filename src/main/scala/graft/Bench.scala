@@ -21,8 +21,10 @@ import org.apache.spark.sql.functions._
   * /proc/self (a jump here = page-cache eviction, the environmental
   * hypothesis), plus post-query ContextCleaner queue depth and
   * shuffle-spill disk usage (a climb here = accumulated-session-state
-  * hypothesis). `SPARK_GRAFT_BENCH_ISOLATE=k` re-runs the suite with a
-  * FRESH SparkSession (new SparkContext) per group of k queries — if
+  * hypothesis), and the whole-stage codegen fallbacks its runs caused
+  * (graft.core.CodegenFallbacks: each is a rejected 64 KB compile).
+  * `SPARK_GRAFT_BENCH_ISOLATE=k` re-runs the suite with a FRESH
+  * SparkSession (new SparkContext) per group of k queries — if
   * inflation vanishes under isolation it is accumulated JVM state; if it
   * persists it is the environment.
   */
@@ -150,6 +152,7 @@ object Bench {
       heapBeforeMb: Long, heapAfterMb: Long,
       diskReadMb: Long, majFlt: Long,
       cleanerQueue: Long, shuffleFiles: Long, shuffleMb: Long,
+      codegenFallbacks: Long,
       drain: Option[graft.core.SessionHygiene.DrainStats] = None) {
     def json: String = {
       val ts = times.map(t => BigDecimal(t)
@@ -158,7 +161,7 @@ object Bench {
         s""""heap_before_mb":$heapBeforeMb,"heap_after_mb":$heapAfterMb,""" +
         s""""disk_read_mb":$diskReadMb,"majflt":$majFlt,""" +
         s""""cleaner_queue":$cleanerQueue,"shuffle_files":$shuffleFiles,""" +
-        s""""shuffle_mb":$shuffleMb""" +
+        s""""shuffle_mb":$shuffleMb,"codegen_fallbacks":$codegenFallbacks""" +
         drain.map(d => s""","drain":${d.json}""").getOrElse("") + "}"
     }
   }
@@ -184,6 +187,7 @@ object Bench {
     val heap0 = heapUsedMb()
     val (rd0, _) = procIo()
     val mf0 = majFaults()
+    val cg0 = graft.core.CodegenFallbacks.count
     val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
     def rep(): Unit = {
       val t0 = System.nanoTime()
@@ -199,7 +203,8 @@ object Bench {
     Diag(times, gc1 - gc0, gn1 - gn0, heap0, heapUsedMb(),
       if (rd0 < 0 || rd1 < 0) -1 else (rd1 - rd0) >> 20,
       { val mf1 = majFaults(); if (mf0 < 0 || mf1 < 0) -1 else mf1 - mf0 },
-      cleanerQueueDepth(spark), sf, smb)
+      cleanerQueueDepth(spark), sf, smb,
+      graft.core.CodegenFallbacks.count - cg0)
   }
 
   // ---- harness --------------------------------------------------------------
@@ -211,6 +216,9 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // after the first session: Spark's logging bootstrap may replace the
+    // log4j configuration, appenders included
+    graft.core.CodegenFallbacks.install()
     spark
   }
 

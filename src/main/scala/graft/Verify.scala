@@ -12,6 +12,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.CodegenFallbacks.install()
     new java.io.File(outDir).mkdirs()
     // Targeted mode (local triage, mirrors SPARK_GRAFT_BENCH_ONLY): dump
     // and declare only the named comma-separated queries
@@ -19,9 +20,13 @@ object Verify {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val (_, fallbacks) = graft.core.CodegenFallbacks.during(
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name"))
+        if (fallbacks > 0) System.err.println(
+          s"[verify] $name codegen fallbacks: $fallbacks")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // 250+ queries in one JVM: release each query's cached blocks and

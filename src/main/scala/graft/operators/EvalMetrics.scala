@@ -43,6 +43,34 @@ object EvalMetrics {
     when(num < 0, -q).otherwise(q)
   }
 
+  /** Appends `out` = isqrt(radicand >= 0) as a long: a float seed plus a
+    * ±2 exact-DECIMAL correction (every engine lands the same integer),
+    * failing loud ("<what> isqrt seed off") if the seed misses — it cannot
+    * for roots below 2⁵². The radicand (__t), seed (__s0) and root each
+    * sit behind an explode(array(…)) Generate barrier, evaluated ONCE per
+    * row (why: wilsonLowerBound).
+    */
+  private[graft] def withIsqrt(df: DataFrame, radicand: Column, out: String,
+      what: String): DataFrame = {
+    require(!df.columns.exists(Seq("__t", "__s0", out).contains),
+      s"input carries an isqrt working column: ${df.columns.mkString(", ")}")
+    def once(d: DataFrame, name: String, e: Column) =
+      d.withColumn(name, explode(array(e)))
+    def sq(c: Column) = dec(c) * dec(c)
+    val (v, s0, rt) = (col("__t"), col("__s0"), col(out))
+    val seeded = once(once(df, "__t", dec(radicand)), "__s0",
+      floor(sqrt(v.cast("double"))).cast("long"))
+    once(seeded, out, when(sq(s0 + 2) <= v, s0 + 2)
+        .when(sq(s0 + 1) <= v, s0 + 1)
+        .when(sq(s0) <= v, s0)
+        .when(sq(s0 - 1) <= v, s0 - 1)
+        .otherwise(s0 - 2))
+      .filter(when(sq(rt) <= v && sq(rt + 1) > v, lit(true))
+        .otherwise(raise_error(concat(lit(s"$what isqrt seed off: "),
+          s0.cast("string"))).cast("boolean")))
+      .drop("__t", "__s0")
+  }
+
   /** micro long -> displayed double (micro/1e6 is the same IEEE double in
     * every engine). */
   private def asRatio(micro: Column): Column = micro.cast("double") / 1e6

@@ -92,10 +92,11 @@ object Mixture {
     *
     * Weights: w_g = isqrt(n_g · 10¹²) — the exact integer square root
     * (≡ floor(10⁶·√n_g)), computed as a float seed + a ±2 exact-decimal
-    * correction so both engines land the same integer no matter how
-    * their sqrt rounds. Quotas: base_g = floor(B·w_g / W), then the
-    * B − Σ base leftovers (always < #groups) go to the largest
-    * remainders B·w_g mod W, ties on the group key ascending.
+    * correction (fail-loud, [[EvalMetrics.withIsqrt]]) so both engines
+    * land the same integer no matter how their sqrt rounds. Quotas:
+    * base_g = floor(B·w_g / W), then the B − Σ base leftovers (always
+    * < #groups) go to the largest remainders B·w_g mod W, ties on the
+    * group key ascending.
     *
     * Scale posture: ONE count aggregation over the corpus; every later
     * frame is group-bounded (the remainder rank is a broadcast
@@ -109,19 +110,12 @@ object Mixture {
       budget: Long): DataFrame = {
     require(groupCols.nonEmpty, "needs >= 1 group column")
     require(budget >= 0, s"budget must be >= 0, got $budget")
-    import graft.operators.EvalMetrics.{idivPos, microRound6}
+    import graft.operators.EvalMetrics.{idivPos, microRound6, withIsqrt}
     val counts = df.groupBy(groupCols: _*)
       .agg(count(lit(1)).as("n_docs")).localCheckpoint()
     val gNames = counts.columns.dropRight(1).toSeq
-    val v = dec(col("n_docs")) * 1000000000000L
-    val s0 = floor(sqrt(col("n_docs").cast("double")) * 1e6).cast("long")
-    def sq(c: Column) = dec(c) * dec(c)
-    val w = when(sq(s0 + 2) <= v, s0 + 2)
-      .when(sq(s0 + 1) <= v, s0 + 1)
-      .when(sq(s0) <= v, s0)
-      .when(sq(s0 - 1) <= v, s0 - 1)
-      .otherwise(s0 - 2)
-    val weighted = counts.withColumn("w_sqrt", w)
+    val weighted = withIsqrt(counts,
+      dec(col("n_docs")) * 1000000000000L, "w_sqrt", "temperature")
     val z = weighted.agg(sum(dec(col("w_sqrt"))).as("__W"))
     val alloc = weighted.crossJoin(broadcast(z))
       .withColumn("base_quota",

@@ -1076,30 +1076,34 @@ object TableOps {
     *   R  = (4·s·(n−s)·10⁶) div n            (micro inner ratio)
     *   T  = Z2·(R + Z2)                      (= 10¹²·z²·(4s(n−s)/n+z²))
     *   rt = isqrt(T)                         (float seed ± 2 exact
-    *                                          correction — the q276
-    *                                          temperature-mix pattern)
+    *                                          correction, fail-loud —
+    *                                          EvalMetrics.withIsqrt)
     *   lb = microRound6(2·10⁶·s + Z2 − rt, 2·(10⁶·n + Z2))
+    *
+    * T, the seed and rt are each evaluated ONCE per group (withIsqrt's
+    * Generate barriers). Inlined, Catalyst would copy the DECIMAL T
+    * subtree into every seed reference and the chain into every consumer:
+    * the generated method outgrows the JVM's 64 KB limit, and the stage
+    * runs interpreted after a rejected compile repeated on every execution.
     *
     * Scale posture: ONE group aggregation, everything after is a
     * per-group integer projection. Envelope: T ≈ 3.84·10¹²·n holds a
-    * DECIMAL comfortably past any group size; the float sqrt seed is
-    * within ±2 of the true root for T < 2⁵³·2¹⁰ (the correction window
-    * covers it loudly — require fails if the seed is further off).
+    * DECIMAL comfortably past any group size, and the seed window holds
+    * far past any reachable T (see withIsqrt).
     *
     * @return (g…, n, s, rate, wilson_lb, wilson_ub)
     */
   def wilsonLowerBound(df: DataFrame, groupCols: Seq[Column],
       successCol: Column): DataFrame = {
     require(groupCols.nonEmpty, "need at least one group column")
-    // outputs AND internal working names: a group column named __t /
-    // __s0 / __rt / __chk would be silently clobbered by the internal
-    // withColumn chain (wrong bounds, not an error) — fail loud instead
-    val reserved = Seq("n", "s", "rate", "wilson_lb", "wilson_ub",
-      "__t", "__s0", "__rt", "__chk")
+    // outputs: a group column named like one would be silently clobbered
+    // (wrong bounds, not an error) — fail loud instead; withIsqrt guards
+    // its own working names
+    val reserved = Seq("n", "s", "rate", "wilson_lb", "wilson_ub")
     require(!df.columns.exists(reserved.contains),
-      s"input carries a reserved output/working column: " +
+      s"input carries a reserved output column: " +
         df.columns.filter(reserved.contains).mkString(", "))
-    import graft.operators.EvalMetrics.{idivPos, microRound6}
+    import graft.operators.EvalMetrics.{idivPos, microRound6, withIsqrt}
     def dec(c: Column) = c.cast("decimal(38,0)")
     val Z2 = 3841459L
     val g = df.filter(successCol.isNotNull)
@@ -1108,23 +1112,8 @@ object TableOps {
     val bigR = idivPos(
       dec(col("s")) * (dec(col("n")) - dec(col("s"))) * 4000000L,
       dec(col("n")))
-    val t = dec(lit(Z2)) * (dec(bigR) + Z2)
-    val s0 = floor(sqrt(t.cast("double"))).cast("long")
-    def sq(c: Column) = dec(c) * dec(c)
-    val rt = when(sq(col("__s0") + 2) <= col("__t"), col("__s0") + 2)
-      .when(sq(col("__s0") + 1) <= col("__t"), col("__s0") + 1)
-      .when(sq(col("__s0")) <= col("__t"), col("__s0"))
-      .when(sq(col("__s0") - 1) <= col("__t"), col("__s0") - 1)
-      .otherwise(col("__s0") - 2)
     val den = (dec(col("n")) * 1000000L + Z2) * 2L
-    g.withColumn("__t", t).withColumn("__s0", s0)
-      .withColumn("__rt", rt)
-      .withColumn("__chk", // fail loud if the seed window ever misses
-        when(sq(col("__rt")) <= col("__t") &&
-          sq(col("__rt") + 1) > col("__t"), lit(true))
-          .otherwise(raise_error(concat(lit("wilson isqrt seed off: "),
-            col("__s0").cast("string"))).cast("boolean")))
-      .filter(col("__chk"))
+    withIsqrt(g, dec(lit(Z2)) * (dec(bigR) + Z2), "__rt", "wilson")
       .select((groupCols.indices.map(i => col(g.columns(i))) ++ Seq(
         col("n"), col("s"),
         microRound6(col("s"), col("n")).cast("double").divide(lit(1e6))

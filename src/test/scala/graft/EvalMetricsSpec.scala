@@ -777,4 +777,36 @@ class EvalMetricsSpec extends AnyFunSuite {
     assert(EvalMetrics.wilcoxonSignedRank(zero, Seq(col("g")), col("x"),
       col("y")).count() == 0)
   }
+
+  test("withIsqrt: exact against BigInteger.sqrt at squares, their " +
+      "neighbours, near 2^53 and past 2^63; a seed off the window fails loud") {
+    def root(v: BigInt) = BigInt(v.bigInteger.sqrt())
+    // k² ± 1 around k = 94906266 straddles 2^53, where the double cast of
+    // the radicand starts rounding; k = 2^40 + 7 puts k² − 1 on the same
+    // double as k², so the seed lands one above the root
+    val ks = Seq(BigInt(1), BigInt(2), BigInt(94906265), BigInt(94906266),
+      BigInt(3037000499L), BigInt(3037000500L), BigInt(2).pow(40) + 7,
+      BigInt(10).pow(15))
+    val two53 = BigInt(2).pow(53)
+    val vs = (Seq(BigInt(0), BigInt(3), two53 - 1, two53, two53 + 1,
+      BigInt(Long.MaxValue), BigInt(Long.MaxValue) + 1) ++
+      ks.flatMap(k => Seq(k * k - 1, k * k, k * k + 1))).distinct
+    assert(vs.exists(_ > Long.MaxValue))
+    val df = vs.map(v => (v.toString, v.toString)).toDF("id", "v")
+    val out = EvalMetrics.withIsqrt(df, col("v").cast("decimal(38,0)"),
+      "r", "test")
+    assert(out.columns.toSeq == Seq("id", "v", "r"))
+    val got = out.collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    vs.foreach(v => assert(got(v.toString) == root(v).toLong, s"isqrt($v)"))
+    // ~1e37: the double seed is dozens off the root — fail loud, never
+    // a wrong root
+    val huge = BigInt(10).pow(37) + 12345
+    assert((BigInt(math.sqrt(huge.toDouble).toLong) - root(huge)).abs > 2)
+    val e = intercept[Exception] {
+      EvalMetrics.withIsqrt(Seq(huge.toString).toDF("v"),
+        col("v").cast("decimal(38,0)"), "r", "test").collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("test isqrt seed off")))
+  }
 }

@@ -2,12 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every declared query runs end-to-end on sf0.001 (the t1 smoke scale);
-  * full value-level correctness is the driver's DuckDB gate (and
+/** Every declared query runs end-to-end on sf0.001 (the t1 smoke scale),
+  * every output column computed, and without a single whole-stage codegen
+  * fallback (a rejected 64 KB compile, repeated on every execution); full
+  * value-level correctness is the driver's DuckDB gate (and
   * tools/check_oracle.py locally).
   */
 class QueriesSmokeSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+  lazy val spark = {
+    val s = SparkTestSession.spark
+    graft.core.CodegenFallbacks.install()
+    s
+  }
 
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -25,9 +31,17 @@ class QueriesSmokeSpec extends AnyFunSuite {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs on sf0.001") {
-      val df = fn(spark, SparkTestSession.Sf0001)
-      assert(df.columns.nonEmpty)
-      df.count()   // forces full execution
+      // the query's eager build-time jobs count too; the action runs the
+      // full physical plan (count() would prune unused columns, and with
+      // them any oversized projection)
+      val (cols, fallbacks) = graft.core.CodegenFallbacks.during {
+        val df = fn(spark, SparkTestSession.Sf0001)
+        df.queryExecution.toRdd.foreach(_ => ())
+        df.columns
+      }
+      assert(cols.nonEmpty)
+      assert(fallbacks == 0,
+        s"$name fell back from whole-stage codegen $fallbacks time(s)")
     }
   }
 }

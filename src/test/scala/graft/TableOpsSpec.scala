@@ -210,24 +210,39 @@ class TableOpsSpec extends AnyFunSuite {
     import graft.operators.TableOps
     def rows(g: String, s: Int, n: Int) =
       (1 to n).map(i => (g, if (i <= s) 1 else 0))
-    // the classic case: 2-for-3 raw-beats 180-for-400, Wilson must flip
+    // the classic case: 2-for-3 raw-beats 180-for-400, Wilson must flip.
+    // Radicand edges: Z/F (s = 0 or n) have T = Z2², a perfect square;
+    // M has T = k² − 1 and Q the nearest reachable T above a square,
+    // k² + 33 (k² + 1 never occurs: T is a multiple of Z2, whose factor
+    // 4679 ≡ 3 mod 4 makes k² ≡ −1 unsolvable); L's T passes 2⁶³
+    val big = 2500000
     val df = (rows("A", 2, 3) ++ rows("B", 180, 400) ++
-      rows("Z", 0, 5) ++ rows("F", 5, 5)).toDF("g", "y")
+      rows("Z", 0, 5) ++ rows("F", 5, 5) ++ rows("M", 340, 1412) ++
+      rows("Q", 282, 2584)).toDF("g", "y")
+      .union(spark.range(big).select(lit("L"),
+        (col("id") % 2).cast("int")))
     val out = TableOps.wilsonLowerBound(df, Seq(col("g")), col("y"))
       .collect().map(r => r.getString(0) -> r).toMap
+    def radicand(s: Long, n: Long): BigInt = {
+      val z2 = BigInt(3841459)
+      z2 * ((BigInt(4000000) * s * (n - s)) / BigInt(n) + z2)
+    }
+    def isSquare(x: BigInt) = BigInt(x.bigInteger.sqrt()).pow(2) == x
+    assert(isSquare(radicand(0, 5)) && isSquare(radicand(5, 5)))
+    assert(isSquare(radicand(340, 1412) + 1))
+    assert(isSquare(radicand(282, 2584) - 33))
+    assert(radicand(big / 2, big) > Long.MaxValue)
     def replica(s: Long, n: Long): (Double, Double) = {
       val z2 = BigInt(3841459)
-      val r = (BigInt(4000000) * s * (n - s)) / BigInt(n)
-      val t = z2 * (r + z2)
-      var rt = BigInt(math.sqrt(t.toDouble).toLong)
-      while ((rt + 1) * (rt + 1) <= t) rt += 1
-      while (rt * rt > t) rt -= 1
+      val t = radicand(s, n)
+      val rt = BigInt(t.bigInteger.sqrt())
       val den = (BigInt(1000000) * n + z2) * 2
       def half(num: BigInt) = ((num * 2000000 + den) / (den * 2)).toDouble / 1e6
       (half(BigInt(2000000) * s + z2 - rt), half(BigInt(2000000) * s + z2 + rt))
     }
     for ((g, s, n) <- Seq(("A", 2L, 3L), ("B", 180L, 400L), ("Z", 0L, 5L),
-        ("F", 5L, 5L))) {
+        ("F", 5L, 5L), ("M", 340L, 1412L), ("Q", 282L, 2584L),
+        ("L", big / 2L, big.toLong))) {
       val (lb, ub) = replica(s, n)
       assert(out(g).getAs[Double]("wilson_lb") == lb, s"$g lb")
       assert(out(g).getAs[Double]("wilson_ub") == ub, s"$g ub")
