@@ -926,7 +926,7 @@ object Stress {
       // documented contract for a refreshable static side
       docs.select(col("doc_id"), explode(col("lines")).as("__line"))
         .select(col("doc_id"),
-          graft.functions.PolyHash.polyStringHash(spark, col("__line")).as("h"))
+          graft.functions.PolyHash.polyStringHash(col("__line")).as("h"))
         .distinct()
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= 2).select(col("h"))
@@ -3214,19 +3214,19 @@ object Stress {
     val texts = spark.read.parquet(textDir)
     time(s"poly_shingles_${t / 1000000}M_x40tok") {
       texts.select(graft.functions.PolyHash
-          .polyShingleHashes(spark, col("text"), 3).as("hs"))
+          .polyShingleHashes(col("text"), 3).as("hs"))
         .agg(sum(size(col("hs")))).collect()
     }
     time(s"minhash_sig32_${t / 1000000}M") {
       texts.select(graft.functions.PolyHash
-          .polyShingleHashes(spark, col("text"), 3).as("hs"))
+          .polyShingleHashes(col("text"), 3).as("hs"))
         .filter(size(col("hs")) > 0)
         .select(graft.functions.MinHashSig.expr(col("hs"), 32).as("sig"))
         .agg(sum(element_at(col("sig"), 1))).collect()
     }
     time(s"poly_simhash_${t / 1000000}M") {
       // signatures reach 2^60 — reduce before summing or the agg overflows
-      texts.select(graft.functions.PolyHash.polySimHash(spark, col("text")).as("s"))
+      texts.select(graft.functions.PolyHash.polySimHash(col("text")).as("s"))
         .agg(sum(pmod(col("s"), lit(1000003L)))).collect()
     }
     time(s"char_trigrams_${t / 1000000}M") {

@@ -43,9 +43,8 @@ object GraftSession {
       .config("spark.sql.legacy.javaCharsets", "true")
       // KV blocks with repeated keys keep the last value (dict semantics)
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // the engine's custom expression surface (lenient_json_clean,
-      // shingle_hashes_k, graft_multi_format_date) registered on every
-      // session — columns built before any session exists still resolve
+      // the engine's SQL function surface (lenient_json_clean,
+      // shingle_hashes_k, graft_multi_format_date, ...) on every session
       .config("spark.sql.extensions", "graft.core.GraftExtensions")
       // Broadcast blocks and shuffle files release through ContextCleaner
       // only after a JVM GC collects their driver-side handles; a driver

@@ -1,6 +1,6 @@
 package graft.dims
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Region dimension + resolution/match semantics (retrieve.py:1027-1195 —
@@ -80,14 +80,6 @@ object Regions {
     */
   def normalizeRegion(c: Column): Column =
     regexp_replace(c, "(?<=.)(特别行政区|自治区|自治州|地区|盟|省|市|区|县)$", "")
-
-  /** (province, city) dimension rows — one row per city name, province =
-    * the reverse index's winner (so joins are never ambiguous).
-    */
-  def cityDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    CityToProvince.toDF("province", "city")
-  }
 
   // literal arrays for the parse pipeline (dimension-bounded plan state)
   private def provinceArr: Column =

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled per-document BLEU-2 sufficient statistics — ONE pass over the
@@ -75,14 +76,10 @@ object BleuDocStats {
   val schema: StructType = StructType(Seq("cl", "rl", "m1", "t1", "m2", "t2")
     .map(n => StructField(n, LongType, nullable = false)))
 
-  /** Column bridge via the registry (the house kernel convention). */
-  def expr(spark: SparkSession, cand: Column, ref: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bleu_doc_stats",
-      exprs => BleuDocStats(exprs.head, exprs(1)), "built-in")
-    org.apache.spark.sql.functions.call_function(
-      "graft_bleu_doc_stats", cand, ref)
-  }
+  /** Column bridge. */
+  def expr(cand: Column, ref: Column): Column =
+    GraftColumnBridge.column(
+      BleuDocStats(GraftColumnBridge.expression(cand), GraftColumnBridge.expression(ref)))
 
   /** 1-gram 61-bit poly hashes, index = token position. */
   private[functions] def gram1(toks: Array[String]): Array[Long] = {

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{BooleanType, DataType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -39,18 +40,11 @@ case class BloomMightContain(child: Expression, bloomBytes: Array[Byte])
 
 object BloomMightContain {
 
-  /** Column bridge; the name carries a content hash so distinct filters in
-    * one session never collide in the registry.
-    */
+  /** Column bridge; the filter rides as serialized expression state. */
   def expr(c: Column, bloom: BloomFilter): Column = {
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    val bytes = bos.toByteArray
-    val name = s"graft_bloom_mc_${java.lang.Integer.toHexString(java.util.Arrays.hashCode(bytes))}"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => BloomMightContain(exprs.head, bytes), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
+    GraftColumnBridge.column(
+      BloomMightContain(GraftColumnBridge.expression(c), bos.toByteArray))
   }
 }

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled single-rank BPE token accounting (see [[graft.operators.Bpe]]):
@@ -70,7 +71,7 @@ case class BpeCount(child: Expression, merges: Seq[String])
 
 object BpeCount {
 
-  /** Content digest for plan rendering / registry names ([[Digests]]).
+  /** Content digest for plan rendering ([[Digests]]).
     * PER-ELEMENT length prefixes make the serialization unambiguous for
     * arbitrary entries (a join-separator alone collides when an entry
     * contains the separator -- trained 2-codepoint tables can't, but the
@@ -80,13 +81,7 @@ object BpeCount {
     Digests.content(
       merges.length + ":" + merges.map(m => m.length + "," + m).mkString("|"))
 
-  /** Column bridge; registry name carries the table digest. */
-  def expr(c: Column, merges: Seq[String]): Column = {
-    val name = s"graft_bpe_count_${mergesDigest(merges)}"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => BpeCount(exprs.head, merges), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, merges: Seq[String]): Column =
+    GraftColumnBridge.column(BpeCount(GraftColumnBridge.expression(c), merges))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined chunking (Gear-hash CDC — Xia et al. 2016 "FastCDC"
@@ -79,19 +79,8 @@ case class CdcChunks(
 }
 
 object CdcChunks {
-  /** Column bridge; params ride the registry name (negative-hash lesson:
-    * names must stay parseable).
-    */
-  def expr(c: Column, minSize: Int, maxSize: Int, maskBits: Int): Column = {
-    val name = s"graft_cdc_chunks_${minSize}_${maxSize}_$maskBits"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      val reg = s.sessionState.functionRegistry
-      if (!reg.functionExists(FunctionIdentifier(name))) {
-        reg.createOrReplaceTempFunction(
-          name, exprs => CdcChunks(exprs.head, minSize, maxSize, maskBits),
-          "built-in")
-      }
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, minSize: Int, maxSize: Int, maskBits: Int): Column =
+    GraftColumnBridge.column(
+      CdcChunks(GraftColumnBridge.expression(c), minSize, maxSize, maskBits))
 }

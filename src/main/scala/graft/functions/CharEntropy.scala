@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled per-document character-entropy signal — the cheap detector for
@@ -61,12 +62,6 @@ case class CharEntropy(child: Expression)
 
 object CharEntropy {
   /** Column bridge. */
-  def expr(c: Column): Column = {
-    val name = "graft_char_entropy"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => CharEntropy(exprs.head), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(CharEntropy(GraftColumnBridge.expression(c)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled char-trigram hash pass for the LM quality scorer (LmScore):
@@ -48,17 +48,9 @@ object CharTrigramHashes {
     new GenericArrayData(out)
   }
 
-  /** Column bridge (same pattern as SimHash64/LangIdVote). */
-  def expr(c: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      val reg = s.sessionState.functionRegistry
-      if (!reg.functionExists(FunctionIdentifier("graft_char_trigram_hashes"))) {
-        reg.createOrReplaceTempFunction(
-          "graft_char_trigram_hashes", exprs => CharTrigramHashes(exprs.head), "built-in")
-      }
-    }
-    org.apache.spark.sql.functions.call_function("graft_char_trigram_hashes", c)
-  }
+  /** Column bridge. */
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(CharTrigramHashes(GraftColumnBridge.expression(c)))
 
   def unpackH3(packed: Column): Column =
     org.apache.spark.sql.functions.shiftrightunsigned(packed, 31)

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen
 import org.apache.spark.sql.catalyst.util.DateFormatter
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -54,10 +55,6 @@ object DateFunctions {
       .when(unit === "年", n.cast("int") * 365)
     when(n =!= "", date_sub(anchor, days))
   }
-
-  /** Full reference chain: literal formats, bare year, relative-to-anchor. */
-  def parseAny(c: Column, anchor: Column): Column =
-    coalesce(parseWithYearFallback(c), parseRelative(c, anchor))
 
   /** Range "A - B" → struct(start,end); single date → both ends equal
     * (retrieve.py:1280-1307).
@@ -139,20 +136,7 @@ object MultiFormatDate {
     catch { case _: Exception => null }
   }
 
-  /** Column bridge via the registry. GraftExtensions injects the function
-    * into every GraftSession, so resolution works even for columns built
-    * before a session exists; for foreign sessions, best-effort temp
-    * registration on whatever session is current at build time.
-    */
-  def expr(c: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      val reg = s.sessionState.functionRegistry
-      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(
-          "graft_multi_format_date"))) {
-        reg.createOrReplaceTempFunction(
-          "graft_multi_format_date", exprs => MultiFormatDate(exprs.head), "built-in")
-      }
-    }
-    call_function("graft_multi_format_date", c)
-  }
+  /** Column bridge. */
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(MultiFormatDate(GraftColumnBridge.expression(c)))
 }

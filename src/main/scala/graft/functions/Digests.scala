@@ -1,16 +1,15 @@
 package graft.functions
 
-/** The ONE content-digest kernel behind plan rendering and registry
-  * names for expression state (codebooks, centroid matrices, delta
-  * tables, merge tables): SHA-256 of the caller's serialization,
-  * truncated to 64 bits, hex. Serialization stays local to each state
-  * type (that is where the ambiguity hazards live — see each caller);
-  * the digest width/encoding lives here so the operators can never
-  * silently diverge.
+/** The ONE content-digest kernel behind plan rendering of expression
+  * state (codebooks, centroid matrices, delta tables, merge tables):
+  * SHA-256 of the caller's serialization, truncated to 64 bits, hex.
+  * Serialization stays local to each state type (that is where the
+  * ambiguity hazards live — see each caller); the digest width/encoding
+  * lives here so the operators can never silently diverge.
   *
-  * 64 bits, not 32: the MultiPatternHits lesson — `hashCode`-sized
-  * registry names last-wins-collide and bind WRONG state to a reused
-  * function name.
+  * The digest only labels a plan string; it names nothing that resolves.
+  * The state itself rides inside the bound expression, so two kernels
+  * with equal digests still run with their own state.
   */
 object Digests {
   def content(serialized: String): String =

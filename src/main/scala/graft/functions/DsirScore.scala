@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled DSIR importance score (Xie et al. 2023, "Data Selection for
@@ -85,20 +86,14 @@ case class DsirScore(child: Expression, deltaFp: Seq[Long])
 
 object DsirScore {
 
-  /** Content digest for plan rendering / registry names ([[Digests]]).
+  /** Content digest for plan rendering ([[Digests]]).
     * Length is prepended so a table prefix can't collide with its
     * extension; comma-joined longs are otherwise unambiguous.
     */
   def deltaDigest(deltaFp: Seq[Long]): String =
     Digests.content(deltaFp.length + ":" + deltaFp.mkString(","))
 
-  /** Column bridge; registry name carries the table digest. */
-  def expr(c: Column, deltaFp: Seq[Long]): Column = {
-    val name = s"graft_dsir_score_${deltaDigest(deltaFp)}"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => DsirScore(exprs.head, deltaFp), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, deltaFp: Seq[Long]): Column =
+    GraftColumnBridge.column(DsirScore(GraftColumnBridge.expression(c), deltaFp))
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused HITS kernel: the ENTIRE fixed-point iteration of
   * [[graft.operators.Graph.hits]] (gather → max-normalize → mirrored
@@ -182,18 +183,12 @@ object HitsKernel {
     new GenericArrayData(out)
   }
 
-  /** Column bridge (no params — one registry name). */
+  /** Column bridge. */
   def expr(nodes: Column, edges: Column, iterations: Column,
-      scale: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_hits_kernel",
-        exprs => HitsKernel(exprs(0), exprs(1), exprs(2), exprs(3)),
-        "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(
-      "graft_hits_kernel", nodes, edges, iterations, scale)
-  }
+      scale: Column): Column =
+    GraftColumnBridge.column(HitsKernel(
+      GraftColumnBridge.expression(nodes), GraftColumnBridge.expression(edges),
+      GraftColumnBridge.expression(iterations), GraftColumnBridge.expression(scale)))
 }
 
 /** Fused weighted-PageRank kernel — [[HitsKernel]]'s sibling for
@@ -358,18 +353,12 @@ object PageRankKernel {
     new GenericArrayData(out)
   }
 
-  /** Column bridge (no params — one registry name). */
+  /** Column bridge. */
   def expr(edges: Column, iterations: Column, dampingPerMille: Column,
-      scale: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_page_rank_kernel",
-        exprs => PageRankKernel(exprs(0), exprs(1), exprs(2), exprs(3)),
-        "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(
-      "graft_page_rank_kernel", edges, iterations, dampingPerMille, scale)
-  }
+      scale: Column): Column =
+    GraftColumnBridge.column(PageRankKernel(
+      GraftColumnBridge.expression(edges), GraftColumnBridge.expression(iterations),
+      GraftColumnBridge.expression(dampingPerMille), GraftColumnBridge.expression(scale)))
 }
 
 /** Fused synchronous-LPA kernel for
@@ -532,14 +521,8 @@ object LabelPropKernel {
     new GenericArrayData(out)
   }
 
-  /** Column bridge (no params — one registry name). */
-  def expr(edges: Column, rounds: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_label_prop_kernel",
-        exprs => LabelPropKernel(exprs(0), exprs(1)), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(
-      "graft_label_prop_kernel", edges, rounds)
-  }
+  /** Column bridge. */
+  def expr(edges: Column, rounds: Column): Column =
+    GraftColumnBridge.column(LabelPropKernel(
+      GraftColumnBridge.expression(edges), GraftColumnBridge.expression(rounds)))
 }

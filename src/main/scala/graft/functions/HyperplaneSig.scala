@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Signed-random-projection LSH signature for embeddings (Charikar 2002)
   * — the cosine analog of the text SimHash: bit k of the signature is the
@@ -107,15 +108,9 @@ object HyperplaneSig {
         s"hyperplane_sig expects array<float> or array<double>, got $t")
     }
 
-  /** Column bridge (dim and width baked into the registered name). */
-  def expr(c: Column, dim: Int, nBits: Int = 60): Column = {
-    val name = s"graft_hyperplane_sig_${dim}_$nBits"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => HyperplaneSig(exprs.head, dim, nBits), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, dim: Int, nBits: Int = 60): Column =
+    GraftColumnBridge.column(HyperplaneSig(GraftColumnBridge.expression(c), dim, nBits))
 }
 
 /** Multi-word hyperplane signature — the WIDE variant that keeps banding
@@ -176,13 +171,8 @@ case class HyperplaneSigWords(child: Expression, dim: Int,
 }
 
 object HyperplaneSigWords {
-  /** Column bridge (shape baked into the registered name). */
-  def expr(c: Column, dim: Int, bitsPerWord: Int = 62, words: Int = 2): Column = {
-    val name = s"graft_hyperplane_sig_${dim}_${bitsPerWord}x$words"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => HyperplaneSigWords(exprs.head, dim, bitsPerWord, words), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, dim: Int, bitsPerWord: Int = 62, words: Int = 2): Column =
+    GraftColumnBridge.column(
+      HyperplaneSigWords(GraftColumnBridge.expression(c), dim, bitsPerWord, words))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 import org.apache.spark.sql.{Column, functions => F}
 
@@ -167,19 +168,9 @@ object ImageDims {
     -1L
   }
 
-  /** Column bridge (same pattern as SimHash64/LangIdVote). */
-  def expr(payload: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).foreach { s =>
-        val reg = s.sessionState.functionRegistry
-        if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier("graft_image_dims"))) {
-          reg.createOrReplaceTempFunction(
-            "graft_image_dims", exprs => ImageDims(exprs.head), "built-in")
-        }
-      }
-    F.call_function("graft_image_dims", payload)
-  }
+  /** Column bridge. */
+  def expr(payload: Column): Column =
+    GraftColumnBridge.column(ImageDims(GraftColumnBridge.expression(payload)))
 
   /** Decoded-format name column (null when undecodable). */
   def formatOf(packed: Column): Column =

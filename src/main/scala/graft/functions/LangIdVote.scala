@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -72,15 +71,7 @@ object LangIdVote {
     best
   }
 
-  /** Column bridge (same pattern as MultiFormatDate). */
-  def expr(c: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      val reg = s.sessionState.functionRegistry
-      if (!reg.functionExists(FunctionIdentifier("graft_lang_id_vote"))) {
-        reg.createOrReplaceTempFunction(
-          "graft_lang_id_vote", exprs => LangIdVote(exprs.head), "built-in")
-      }
-    }
-    call_function("graft_lang_id_vote", c)
-  }
+  /** Column bridge. */
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(LangIdVote(GraftColumnBridge.expression(c)))
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** X2 `lenient_json_clean` — a custom Catalyst Expression implementing the
@@ -12,9 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * return the LARGEST candidate — null when none is found.
   *
   * A real Expression (not a UDF) so it is null-safe inside Catalyst,
-  * participates in constant folding, and can be registered for the SQL
-  * surface. The reference-call codegen bridge keeps it inside WholeStageCodegen,
-  * not in tight numeric loops (SURVEY.md §7 custom-surface budget).
+  * participates in constant folding, and is exposed to SQL as
+  * `lenient_json_clean` by [[graft.core.GraftExtensions]]. The
+  * reference-call codegen bridge keeps it inside WholeStageCodegen, not in
+  * tight numeric loops (SURVEY.md §7 custom-surface budget).
   */
 case class LenientJsonClean(child: Expression)
     extends UnaryExpression with RefKernelCodegen {
@@ -90,16 +92,7 @@ object LenientJsonClean {
     -1
   }
 
-  /** SQL registration: `SELECT lenient_json_clean(col) FROM ...`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lenient_json_clean", exprs => LenientJsonClean(exprs.head), "built-in")
-
-  /** Column API — registers on the session, then resolves through the
-    * function registry (the public Column↔Expression bridge in Spark 4).
-    */
-  def lenientJsonClean(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("lenient_json_clean", c)
-  }
+  /** Column bridge. */
+  def lenientJsonClean(c: Column): Column =
+    GraftColumnBridge.column(LenientJsonClean(GraftColumnBridge.expression(c)))
 }

@@ -58,10 +58,6 @@ object Log2Fixed {
     * domain) — nulls surface bad domains instead of junk.
     */
   def expr(m: Column): Column =
-    // direct expression construction via the classic-package bridge
-    // (r14, ADVICE fix): the previous SparkSession.active + temp-function
-    // registration failed analysis under a different/absent thread-active
-    // session and paid a registry round trip per call site
     org.apache.spark.sql.classic.GraftColumnBridge.column(Log2FixedExpr(
       org.apache.spark.sql.classic.GraftColumnBridge.expression(
         m.cast("long"))))

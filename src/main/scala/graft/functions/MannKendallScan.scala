@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused Mann–Kendall block-pair kernel: one call folds every valid
   * (a-point, b-point) pair between two rank-blocks of a series into the
@@ -123,14 +124,8 @@ object MannKendallScan {
     InternalRow(s, np)
   }
 
-  /** Column bridge (no params — one registry name). */
-  def expr(a: Column, b: Column, same: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_mann_kendall_scan",
-        exprs => MannKendallScan(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(
-      "graft_mann_kendall_scan", a, b, same)
-  }
+  /** Column bridge. */
+  def expr(a: Column, b: Column, same: Column): Column =
+    GraftColumnBridge.column(MannKendallScan(GraftColumnBridge.expression(a),
+      GraftColumnBridge.expression(b), GraftColumnBridge.expression(same)))
 }

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Compiled MinHash signature over pre-hashed shingles (`array<long>`,
   * e.g. ShingleHashes output): sig_i = min over shingles x of
@@ -78,13 +79,7 @@ object MinHashSig {
                          math.abs(rnd.nextLong()) % HashPrime))
   }
 
-  /** Column bridge via the registry (numHashes baked into the name). */
-  def expr(c: Column, numHashes: Int): Column = {
-    val name = s"graft_minhash_sig_$numHashes"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => MinHashSig(exprs.head, numHashes), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, numHashes: Int): Column =
+    GraftColumnBridge.column(MinHashSig(GraftColumnBridge.expression(c), numHashes))
 }

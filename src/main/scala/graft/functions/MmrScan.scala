@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused per-query MMR greedy-selection kernel (Carbonell & Goldstein
   * 1998): one call consumes a query's candidate array and pairwise-sim
@@ -35,8 +36,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   * (doc_id unique — duplicates fail loud); `sims` =
   * array<struct<a bigint, b bigint, s bigint>> or null (reads empty);
   * entries naming non-candidate docs are ignored, duplicate (a, b)
-  * entries keep the max. k and lambdaTenths ride the registry name
-  * (the negative-hash lesson: params in the name, never a closure).
+  * entries keep the max.
   *
   * Output: array<struct<sel_rank int, doc_id bigint, rn bigint,
   * ms bigint nullable, sc bigint>> — min(k, n) picks in selection order.
@@ -212,13 +212,8 @@ object MmrScan {
     new GenericArrayData(out)
   }
 
-  /** Column bridge; k and lambdaTenths ride the registry name. */
-  def expr(cands: Column, sims: Column, k: Int, lambdaTenths: Int): Column = {
-    val name = s"graft_mmr_scan_${k}_$lambdaTenths"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => MmrScan(exprs(0), exprs(1), k, lambdaTenths), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, cands, sims)
-  }
+  /** Column bridge. */
+  def expr(cands: Column, sims: Column, k: Int, lambdaTenths: Int): Column =
+    GraftColumnBridge.column(MmrScan(GraftColumnBridge.expression(cands),
+      GraftColumnBridge.expression(sims), k, lambdaTenths))
 }

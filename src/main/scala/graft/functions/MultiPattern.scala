@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Aho–Corasick multi-pattern scan: ONE pass over the text regardless of
@@ -231,21 +232,7 @@ object MultiPatternHits {
       }
     }
 
-  /** Column bridge; the registry name carries a 64-bit content digest of
-    * the dictionary (SHA-256 prefix over length-prefixed patterns (a bare joiner is ambiguous when a pattern contains it) — a 32-bit
-    * Seq.hashCode collides by pigeonhole across enough dictionaries, and
-    * createOrReplaceTempFunction last-wins would silently bind an earlier
-    * Column to the WRONG automaton).
-    */
-  def expr(c: Column, patterns: Seq[String]): Column = {
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(patterns.map(p => s"${p.length}:$p").mkString.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    val name = s"graft_multi_hits_$digest"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => MultiPatternHits(exprs.head, patterns), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, patterns: Seq[String]): Column =
+    GraftColumnBridge.column(MultiPatternHits(GraftColumnBridge.expression(c), patterns))
 }

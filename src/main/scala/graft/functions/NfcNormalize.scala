@@ -3,8 +3,9 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC normalization as a compiled Catalyst expression — the
@@ -46,9 +47,6 @@ case class NfcNormalize(child: Expression)
 object NfcNormalize {
 
   /** Column bridge for the compiled NFC pass. */
-  def expr(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_nfc_normalize", c)
-  }
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(NfcNormalize(GraftColumnBridge.expression(c)))
 }

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Portable (engine-independent) polynomial text hashes — the hash layer
@@ -96,66 +97,41 @@ object PolyHash {
   }
 
   /** Column bridge for the compiled shingle hasher. */
-  def polyShingleHashes(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_poly_shingle_hashes_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PolyShingleHashes(exprs.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def polyShingleHashes(c: Column, k: Int): Column =
+    GraftColumnBridge.column(PolyShingleHashes(GraftColumnBridge.expression(c), k))
 
   /** Column bridge for the compiled ORDERED gram hasher (positions kept). */
-  def polyGramHashes(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_poly_gram_hashes_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PolyGramHashes(exprs.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def polyGramHashes(c: Column, k: Int): Column =
+    GraftColumnBridge.column(PolyGramHashes(GraftColumnBridge.expression(c), k))
 
   /** Column bridge for the compiled ORDERED 61-bit gram hasher — the
     * collision-hardened production sizing of [[polyGramHashes]] that is
     * STILL oracle-replayable (q135): same tokenize → k-gram → char fold
     * shape, modulus 2⁶¹−1 instead of 1e9+7.
     */
-  def polyGramHashes61(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_poly_gram_hashes61_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PolyGramHashes61(exprs.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def polyGramHashes61(c: Column, k: Int): Column =
+    GraftColumnBridge.column(PolyGramHashes61(GraftColumnBridge.expression(c), k))
 
   /** Column bridge for the compiled per-band bucket fold. */
-  def polyBandBuckets(spark: SparkSession, sig: Column, bands: Int, rowsPerBand: Int): Column = {
-    val name = s"graft_poly_band_buckets_${bands}_$rowsPerBand"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PolyBandBuckets(exprs.head, bands, rowsPerBand), "built-in")
-    org.apache.spark.sql.functions.call_function(name, sig)
-  }
+  def polyBandBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    GraftColumnBridge.column(
+      PolyBandBuckets(GraftColumnBridge.expression(sig), bands, rowsPerBand))
 
   /** Column bridge for the compiled whole-string poly31 fold — the scalar
     * hash behind the line-level dedup family (q121/q122): semantics of
     * `TextFunctions.tokenHash` in one compiled pass, so line shuffles carry
     * 8-byte keys instead of line strings.
     */
-  def polyStringHash(spark: SparkSession, c: Column,
-      hash61: Boolean = false): Column = {
-    val name = if (hash61) "graft_poly_string_hash61" else "graft_poly_string_hash"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PolyStringHash(exprs.head, hash61), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  def polyStringHash(c: Column, hash61: Boolean = false): Column =
+    GraftColumnBridge.column(PolyStringHash(GraftColumnBridge.expression(c), hash61))
 
   /** Column bridge for the compiled first-occurrence line filter (the
     * within-doc half of line dedup, q122): keeps the first element per
     * distinct poly31 hash, preserving order — per-row semantics, so it
     * compiles to a narrow projection with ZERO exchanges.
     */
-  def polyFirstOccurrence(spark: SparkSession, arr: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_poly_first_occurrence",
-      exprs => PolyFirstOccurrence(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function(
-      "graft_poly_first_occurrence", arr)
-  }
+  def polyFirstOccurrence(arr: Column): Column =
+    GraftColumnBridge.column(PolyFirstOccurrence(GraftColumnBridge.expression(arr)))
 
   /** Column bridge for the compiled flagged-line filter: drops every
     * element whose poly31 hash is in `flagged` (sorted ascending; binary
@@ -163,25 +139,14 @@ object PolyHash {
     * codebook pattern — so the filter is a narrow stream-safe projection:
     * no join, identical plan in batch and Structured Streaming.
     */
-  def polyDropFlagged(spark: SparkSession, arr: Column, flagged: Array[Long],
-      hash61: Boolean = false): Column = {
+  def polyDropFlagged(arr: Column, flagged: Array[Long], hash61: Boolean = false): Column = {
     val sorted = flagged.clone(); java.util.Arrays.sort(sorted)
-    val mode = if (hash61) "61" else ""
-    // hex digest: Arrays.hashCode can be negative and '-' is unparseable
-    // in a registry function name
-    val name = s"graft_poly_drop_flagged${mode}_" +
-      java.lang.Integer.toHexString(java.util.Arrays.hashCode(sorted))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PolyDropFlagged(exprs.head, sorted, hash61), "built-in")
-    org.apache.spark.sql.functions.call_function(name, arr)
+    GraftColumnBridge.column(PolyDropFlagged(GraftColumnBridge.expression(arr), sorted, hash61))
   }
 
   /** Column bridge for the compiled 60-bit SimHash. */
-  def polySimHash(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_poly_simhash", exprs => PolySimHash(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_poly_simhash", c)
-  }
+  def polySimHash(c: Column): Column =
+    GraftColumnBridge.column(PolySimHash(GraftColumnBridge.expression(c)))
 
   // ---- composable SPEC forms (interpreted HOFs; bit-equality asserted
   //      against the compiled expressions in DedupSimilaritySpec) ----------

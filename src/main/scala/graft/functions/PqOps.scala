@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
 /** Product-quantization kernels (Jégou et al. 2011, "Product Quantization
@@ -28,8 +29,7 @@ object PqOps {
     transform(c, v => floor(v.cast("double") * 1000 + lit(0.5)).cast("long"))
   }
 
-  /** 64-bit content digest for registry names (the MultiPatternHits
-    * lesson: 32-bit hashCode last-wins collisions bind wrong state).
+  /** 64-bit content digest for plan rendering ([[Digests]]).
     * Level separators keep the (m, ks, subDim) SHAPE in the digest — a
     * flat join would collide [[ [1,2] ]] with [[ [1],[2] ]].
     */
@@ -131,16 +131,9 @@ case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Long]]])
 }
 
 object PqEncode {
-  /** Column bridge; registry name carries a digest of the codebook. */
-  def expr(c: org.apache.spark.sql.Column, codebooks: Seq[Seq[Seq[Long]]]): org.apache.spark.sql.Column = {
-    val name = s"graft_pq_encode_${PqOps.codebookDigest(codebooks)}"
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).foreach {
-        _.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, exprs => PqEncode(exprs.head, codebooks), "built-in")
-      }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: org.apache.spark.sql.Column, codebooks: Seq[Seq[Seq[Long]]]): org.apache.spark.sql.Column =
+    GraftColumnBridge.column(PqEncode(GraftColumnBridge.expression(c), codebooks))
 }
 
 /** ADC (asymmetric distance computation): exact quantized distance from a
@@ -258,13 +251,7 @@ object PqAdcDist {
   /** Column bridge over an ALREADY-quantized (`array<long>`) query. */
   def exprQuantized(qvQuantized: org.apache.spark.sql.Column,
       codes: org.apache.spark.sql.Column,
-      codebooks: Seq[Seq[Seq[Long]]]): org.apache.spark.sql.Column = {
-    val name = s"graft_pq_adc_${PqOps.codebookDigest(codebooks)}"
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).foreach {
-        _.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, exprs => PqAdcDist(exprs(0), exprs(1), codebooks), "built-in")
-      }
-    org.apache.spark.sql.functions.call_function(name, qvQuantized, codes)
-  }
+      codebooks: Seq[Seq[Seq[Long]]]): org.apache.spark.sql.Column =
+    GraftColumnBridge.column(PqAdcDist(GraftColumnBridge.expression(qvQuantized),
+      GraftColumnBridge.expression(codes), codebooks))
 }

@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Compiled q-digest compression kernel (Shrivastava et al. 2004, in the
   * deterministic bottom-up formulation of Agarwal et al. 2012 "Mergeable
@@ -146,16 +147,7 @@ object QDigestCompress {
     out.sortBy(x => (x._1, x._2)).toArray
   }
 
-  /** Column bridge; bits and k ride the registry name (the negative-hash
-    * lesson: params in the name, never in a closure a reused name could
-    * rebind wrong).
-    */
-  def expr(c: Column, bits: Int, k: Int): Column = {
-    val name = s"graft_qdigest_compress_${bits}_$k"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => QDigestCompress(exprs.head, bits, k), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, bits: Int, k: Int): Column =
+    GraftColumnBridge.column(QDigestCompress(GraftColumnBridge.expression(c), bits, k))
 }

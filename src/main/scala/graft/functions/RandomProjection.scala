@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Johnson–Lindenstrauss random projection to `k` integer coordinates —
   * the dimensionality-reduction sibling of [[HyperplaneSig]] (same
@@ -58,13 +59,7 @@ case class RandomProjection(child: Expression, dim: Int, k: Int)
 
 object RandomProjection {
 
-  /** Column bridge (dim and k baked into the registered name). */
-  def expr(c: Column, dim: Int, k: Int): Column = {
-    val name = s"graft_random_projection_${dim}_$k"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => RandomProjection(exprs.head, dim, k), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, dim: Int, k: Int): Column =
+    GraftColumnBridge.column(RandomProjection(GraftColumnBridge.expression(c), dim, k))
 }

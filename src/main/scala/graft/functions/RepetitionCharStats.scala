@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled counterpart of `QualityRules.repetitionSignals`'s per-row
@@ -147,14 +148,8 @@ case class RepetitionCharStats(child: Expression, topGramN: Int, dupGramN: Int)
 }
 
 object RepetitionCharStats {
-  /** Column bridge; gram sizes ride the registered name. */
-  def expr(textAndLines: Column, topGramN: Int, dupGramN: Int): Column = {
-    val name = s"graft_repetition_char_stats_${topGramN}_$dupGramN"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => RepetitionCharStats(exprs.head, topGramN, dupGramN),
-        "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, textAndLines)
-  }
+  /** Column bridge. */
+  def expr(textAndLines: Column, topGramN: Int, dupGramN: Int): Column =
+    GraftColumnBridge.column(
+      RepetitionCharStats(GraftColumnBridge.expression(textAndLines), topGramN, dupGramN))
 }

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled Gopher-style repetition metrics — ONE tokenize pass per row
@@ -92,13 +93,7 @@ case class RepetitionStats(child: Expression, kTop: Int, kDup: Int)
 }
 
 object RepetitionStats {
-  /** Column bridge (gram sizes baked into the registered name). */
-  def expr(c: Column, kTop: Int = 2, kDup: Int = 3): Column = {
-    val name = s"graft_repetition_stats_${kTop}_$kDup"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => RepetitionStats(exprs.head, kTop, kDup), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. */
+  def expr(c: Column, kTop: Int = 2, kDup: Int = 3): Column =
+    GraftColumnBridge.column(RepetitionStats(GraftColumnBridge.expression(c), kTop, kDup))
 }

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document script profile — codepoint counts by writing system, the
@@ -63,9 +64,6 @@ object ScriptProfile {
     StructField("n_other", IntegerType, nullable = false)))
 
   /** Column bridge for the compiled profile pass. */
-  def expr(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_script_profile", exprs => ScriptProfile(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_script_profile", c)
-  }
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(ScriptProfile(GraftColumnBridge.expression(c)))
 }

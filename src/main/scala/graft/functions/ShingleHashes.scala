@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
@@ -87,11 +88,9 @@ object ShingleHashes {
     out.toArray
   }
 
-  /** Column API via the registry bridge (k baked into the function name). */
-  def shingleHashes(spark: SparkSession, c: Column, k: Int): Column = {
-    val name = s"graft_shingle_hashes_$k"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHashes(exprs.head, k), "built-in")
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
+  /** Column bridge. `spark` is unused; the signature stays because
+    * `perfbench` calls it.
+    */
+  def shingleHashes(spark: SparkSession, c: Column, k: Int): Column =
+    GraftColumnBridge.column(ShingleHashes(GraftColumnBridge.expression(c), k))
 }

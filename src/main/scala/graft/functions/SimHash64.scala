@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled 64-bit SimHash: tokenize (ASCII-\s, same as TextFunctions
@@ -58,15 +58,7 @@ object SimHash64 {
     sig
   }
 
-  /** Column bridge (same pattern as LangIdVote/MultiFormatDate). */
-  def expr(c: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      val reg = s.sessionState.functionRegistry
-      if (!reg.functionExists(FunctionIdentifier("graft_simhash64"))) {
-        reg.createOrReplaceTempFunction(
-          "graft_simhash64", exprs => SimHash64(exprs.head), "built-in")
-      }
-    }
-    org.apache.spark.sql.functions.call_function("graft_simhash64", c)
-  }
+  /** Column bridge. */
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(SimHash64(GraftColumnBridge.expression(c)))
 }

@@ -26,8 +26,7 @@ object TextFunctions {
   def tokens(c: Column): Column =
     // compiled byte-scan kernel (r14) — bit-identical to the composable
     // `filter(split(trim(c), "\\s+"), x => x =!= "")` (see [[WsTokens]]
-    // and the equivalence spec); session-free Column construction via
-    // the classic-package bridge, no registry round trip
+    // and the equivalence spec)
     org.apache.spark.sql.classic.GraftColumnBridge.column(
       WsTokens(org.apache.spark.sql.classic.GraftColumnBridge.expression(c)))
 
@@ -101,13 +100,6 @@ object TextFunctions {
     val t = tokens(c)
     val stops = filter(t, w => w.isin(stopwords: _*))
     when(size(t) === 0, lit(0.0)).otherwise(size(stops).cast("double") / size(t))
-  }
-
-  /** Punctuation chars / total chars, 0.0 for empty. */
-  def punctRatio(c: Column): Column = {
-    val n = length(c)
-    val p = size(regexp_extract_all(c, lit("[\\.,;:!\\?]"), lit(0)))
-    when(n === 0, lit(0.0)).otherwise(p.cast("double") / n)
   }
 
   /** Mean token length (chars), 0.0 for empty. */

@@ -4,8 +4,9 @@ import java.nio.charset.{CharacterCodingException, Charset, CodingErrorAction}
 import java.text.Normalizer
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Canonical text form for dedup keying — the standard chain every
@@ -53,11 +54,8 @@ object CanonicalText {
   }
 
   /** Column bridge for the compiled canonicalization pass. */
-  def expr(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_canonical_text", exprs => CanonicalText(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_canonical_text", c)
-  }
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(CanonicalText(GraftColumnBridge.expression(c)))
 }
 
 /** Mojibake repair (the ftfy core heuristic): text that went through a
@@ -113,11 +111,8 @@ object FixMojibake {
   }
 
   /** Column bridge for the compiled repair pass. */
-  def expr(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fix_mojibake", exprs => FixMojibake(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_fix_mojibake", c)
-  }
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(FixMojibake(GraftColumnBridge.expression(c)))
 }
 
 /** Payment-card redaction with Luhn validation — the upgrade over a bare
@@ -176,9 +171,6 @@ object RedactCardNumbers {
   }
 
   /** Column bridge for the compiled redaction pass. */
-  def expr(spark: SparkSession, c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_redact_cards", exprs => RedactCardNumbers(exprs.head), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_redact_cards", c)
-  }
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(RedactCardNumbers(GraftColumnBridge.expression(c)))
 }

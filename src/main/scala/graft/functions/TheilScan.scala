@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused Theil–Sen block-pair kernel: one call enumerates every valid
   * (a-point, b-point) pair between two rank-blocks of a series and either
@@ -29,7 +30,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   * BigInt past it — and every overflow fails loud (`subtractExact`,
   * `longValueExact`), the same ANSI-throw posture as the SQL twin.
   *
-  * Modes (params ride the registry name, never a closure):
+  * Modes:
   *  - `filterShift = -1`: scan all pairs; `filterShift ≥ 0`: only pairs
   *    whose `slope >> filterShift == bucket` (the 4th child).
   *  - `emitShift ≥ 0`: return `array<struct<b, c>>` — slope-bucket
@@ -190,19 +191,11 @@ object TheilPairScan {
     } else new GenericArrayData(raw.result())
   }
 
-  /** Column bridge; shifts ride the registry name (the negative-hash
-    * lesson: params in the name, never in a closure a reused name could
-    * rebind wrong).
-    */
+  /** Column bridge. */
   def expr(a: Column, b: Column, same: Column, bucket: Column,
-      filterShift: Int, emitShift: Int): Column = {
-    def tag(v: Int) = if (v < 0) s"m${-v}" else v.toString
-    val name = s"graft_theil_scan_${tag(filterShift)}_${tag(emitShift)}"
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach {
-      _.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => TheilPairScan(exprs(0), exprs(1), exprs(2), exprs(3),
-          filterShift, emitShift), "built-in")
-    }
-    org.apache.spark.sql.functions.call_function(name, a, b, same, bucket)
-  }
+      filterShift: Int, emitShift: Int): Column =
+    GraftColumnBridge.column(TheilPairScan(
+      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b),
+      GraftColumnBridge.expression(same), GraftColumnBridge.expression(bucket),
+      filterShift, emitShift))
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.{Column, SparkSession}
 
@@ -80,11 +81,12 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "built-in")
-    org.apache.spark.sql.functions.call_function("graft_cosine_sim", a, b)
-  }
+  /** Column bridge. `spark` is unused; the signature stays because
+    * `perfbench` calls it.
+    */
+  def cosineSim(spark: SparkSession, a: Column, b: Column): Column =
+    GraftColumnBridge.column(
+      CosineSim(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }
 
 /** Compiled L2 norm of an `array<float>` vector: sqrt of the left-to-right
@@ -113,18 +115,9 @@ case class L2Norm(child: Expression)
 }
 
 object L2Norm {
-  /** Column bridge (same pattern as SimHash64/LangIdVote). */
-  def expr(c: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      val reg = s.sessionState.functionRegistry
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier("graft_l2_norm"))) {
-        reg.createOrReplaceTempFunction(
-          "graft_l2_norm", exprs => L2Norm(exprs.head), "built-in")
-      }
-    }
-    org.apache.spark.sql.functions.call_function("graft_l2_norm", c)
-  }
+  /** Column bridge. */
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(L2Norm(GraftColumnBridge.expression(c)))
 }
 
 /** Compiled symmetric int8 quantization summary of an `array<float>`
@@ -247,26 +240,16 @@ case class IvfBuckets(child: Expression, centroids: Seq[Seq[Double]], nprobe: In
 }
 
 object IvfBuckets {
-  /** 64-bit content digest of a centroid matrix — registry names and plan
-    * rendering both ride it (the PqOps.codebookDigest discipline: exact
-    * decimal serialization with level separators, so neither a reshaped
-    * matrix nor a 32-bit hashCode collision can bind wrong state).
+  /** 64-bit content digest of a centroid matrix for plan rendering
+    * ([[Digests]]): exact decimal serialization with level separators, so
+    * a reshaped matrix renders a different digest.
     */
   def digest(centroids: Seq[Seq[Double]]): String =
     Digests.content(centroids.map(_.mkString(",")).mkString(";"))
 }
 
 object QuantizeStats {
-  /** Column bridge (same pattern as SimHash64/LangIdVote). */
-  def expr(c: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach { s =>
-      val reg = s.sessionState.functionRegistry
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier("graft_quantize_stats"))) {
-        reg.createOrReplaceTempFunction(
-          "graft_quantize_stats", exprs => QuantizeStats(exprs.head), "built-in")
-      }
-    }
-    org.apache.spark.sql.functions.call_function("graft_quantize_stats", c)
-  }
+  /** Column bridge. */
+  def expr(c: Column): Column =
+    GraftColumnBridge.column(QuantizeStats(GraftColumnBridge.expression(c)))
 }

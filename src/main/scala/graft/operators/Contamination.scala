@@ -78,7 +78,7 @@ object Contamination {
       bloomPrefilter: Boolean = false, bloomFpp: Double = 0.01): DataFrame = {
     val spark = docs.sparkSession
     def grams(c: Column) =
-      array_distinct(graft.functions.PolyHash.polyGramHashes61(spark, c, k))
+      array_distinct(graft.functions.PolyHash.polyGramHashes61(c, k))
     val benchSet = bench
       .select(explode(grams(benchTextCol)).as("__g"))
       .distinct()

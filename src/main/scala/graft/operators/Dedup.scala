@@ -77,13 +77,6 @@ object Dedup {
     array(hashes: _*)
   }
 
-  /** 64-bit shingle base hashes, reduced mod HashPrime. */
-  def hashShingles(shingleArr: Column): Column =
-    transform(shingleArr, s => pmod(xxhash64(s), lit(HashPrime)))
-
-  def minHashSignature(shingleArr: Column, numHashes: Int): Column =
-    minHashSignatureFromHashes(hashShingles(shingleArr), numHashes)
-
   /** MinHash LSH near-dup pairs.
     * @param df must have a unique id column `idCol` and text `textCol`.
     * Bands of `rowsPerBand` signature slots become bucket keys; docs
@@ -126,7 +119,7 @@ object Dedup {
     val hashed = df
       .select(idCol.as("id"), textCol.as("__vtxt"),
         graft.functions.PolyHash
-          .polyShingleHashes(df.sparkSession, textCol, shingleSize).as("hs"))
+          .polyShingleHashes(textCol, shingleSize).as("hs"))
       .withColumn("hv", if (verifyOn64Bit)
           array_distinct(graft.functions.ShingleHashes
             .shingleHashes(df.sparkSession, col("__vtxt"), shingleSize))
@@ -138,7 +131,7 @@ object Dedup {
     val banded = withSig.select(
       col("id"),
       posexplode(graft.functions.PolyHash
-        .polyBandBuckets(df.sparkSession, col("sig"), bands, rows)))
+        .polyBandBuckets(col("sig"), bands, rows)))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
     val cand = banded.as("a")
       .join(banded.as("b"),
@@ -357,8 +350,8 @@ object Dedup {
       bloomPrefilter: Boolean = false, bloomFpp: Double = 0.01): DataFrame = {
     require(n >= 1, "gram size must be >= 1")
     val gramHashes =
-      if (hash64) graft.functions.PolyHash.polyGramHashes61(df.sparkSession, textCol, n)
-      else graft.functions.PolyHash.polyGramHashes(df.sparkSession, textCol, n)
+      if (hash64) graft.functions.PolyHash.polyGramHashes61(textCol, n)
+      else graft.functions.PolyHash.polyGramHashes(textCol, n)
     val grams = df
       .select(idCol.as("doc_id"), posexplode(gramHashes))
       .select(col("doc_id"), col("pos"), col("col").as("h"))
@@ -540,7 +533,7 @@ object Dedup {
       // paths disagreed on n_dropped for null-bearing arrays.
       .filter(col("__line").isNotNull)
       .withColumn("__h",
-        graft.functions.PolyHash.polyStringHash(spark, col("__line"), hash64))
+        graft.functions.PolyHash.polyStringHash(col("__line"), hash64))
     // distinct (id, hash) before the count → partial agg collapses a doc's
     // repeated lines map-side; the exchange then carries each (doc, line)
     // pair once.
@@ -597,7 +590,7 @@ object Dedup {
     def hashed(df: DataFrame) = df
       .select(idCol.as("id"), textCol.as("__vtxt"),
         graft.functions.PolyHash
-          .polyShingleHashes(df.sparkSession, textCol, shingleSize).as("hs"))
+          .polyShingleHashes(textCol, shingleSize).as("hs"))
       .withColumn("hv", if (verifyOn64Bit)
           array_distinct(graft.functions.ShingleHashes
             .shingleHashes(df.sparkSession, col("__vtxt"), shingleSize))
@@ -608,7 +601,7 @@ object Dedup {
       .withColumn("sig", graft.functions.MinHashSig.expr(col("hs"), numHashes))
       .select(col("id"),
         posexplode(graft.functions.PolyHash
-          .polyBandBuckets(h.sparkSession, col("sig"), bands, rows)))
+          .polyBandBuckets(col("sig"), bands, rows)))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
     val hashedOld = hashed(oldDf)
     val hashedNew = hashed(newDf)
@@ -677,7 +670,7 @@ object Dedup {
     val spark = df.sparkSession
     df.select(idCol.as("__id"), explode(linesCol).as("__line"))
       .select(col("__id"),
-        graft.functions.PolyHash.polyStringHash(spark, col("__line"), hash64)
+        graft.functions.PolyHash.polyStringHash(col("__line"), hash64)
           .as("__h"))
       .distinct()
       .groupBy(col("__h")).agg(count(lit(1)).as("__df"))
@@ -731,7 +724,7 @@ object Dedup {
     df.select(idCol.as("id"), linesCol.as("__lines"))
       .select(col("id"), size(col("__lines")).as("n_lines"),
         graft.functions.PolyHash
-          .polyDropFlagged(spark, col("__lines"), flagged, hash64)
+          .polyDropFlagged(col("__lines"), flagged, hash64)
           .as("__kept"))
       .select(col("id"), col("n_lines"),
         (col("n_lines") - size(col("__kept"))).cast("long").as("n_dropped"),
@@ -791,7 +784,7 @@ object Dedup {
         posexplode_outer(col("__lines")).as(Seq("__pos", "__line")))
       .withColumn("__h",
         when(col("__line").isNotNull,
-          graft.functions.PolyHash.polyStringHash(spark, col("__line"), hash64)))
+          graft.functions.PolyHash.polyStringHash(col("__line"), hash64)))
     val marked = ex.join(flaggedH, Seq("__h"), "left_outer")
     marked.groupBy(col("id"), col("n_lines"))
       .agg(
@@ -828,7 +821,7 @@ object Dedup {
     val spark = df.sparkSession
     df.select(idCol.as("id"), linesCol.as("__lines"))
       .select(col("id"), size(col("__lines")).as("n_lines_in"),
-        graft.functions.PolyHash.polyFirstOccurrence(spark, col("__lines"))
+        graft.functions.PolyHash.polyFirstOccurrence(col("__lines"))
           .as("__kept"))
       .select(col("id"), col("n_lines_in"),
         size(col("__kept")).cast("long").as("n_lines_out"),
@@ -911,8 +904,7 @@ object Dedup {
     // DedupSimilaritySpec). The per-doc (pos, h) set is already distinct
     // (a position repeats only across consecutive windows, which the
     // kernel collapses), so the frame-level distinct is gone too.
-    val grams = graft.functions.PolyHash.polyGramHashes61(
-      df.sparkSession, textCol, k)
+    val grams = graft.functions.PolyHash.polyGramHashes61(textCol, k)
     df.select(idCol.as("id"),
         explode(org.apache.spark.sql.classic.GraftColumnBridge.column(
           graft.functions.WinnowSelect(
@@ -929,8 +921,7 @@ object Dedup {
       textCol: Column, k: Int = 5, w: Int = 8): DataFrame = {
     require(k >= 1 && k <= 16, s"k must be in 1..16, got $k")
     require(w >= 2 && w <= 64, s"w must be in 2..64, got $w")
-    val grams = graft.functions.PolyHash.polyGramHashes61(
-      df.sparkSession, textCol, k)
+    val grams = graft.functions.PolyHash.polyGramHashes61(textCol, k)
     df.select(idCol.as("id"), grams.as("__g"))
       .withColumn("__nw",
         when(size(col("__g")) >= w, size(col("__g")) - (w - 1))

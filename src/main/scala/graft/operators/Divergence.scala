@@ -101,7 +101,7 @@ object Divergence {
     require(n >= 1 && n <= 8, s"n must be in 1..8, got $n")
     val toks = graft.functions.TextFunctions.tokens(textCol)
     val grams: Column =
-      if (hash64) PolyHash.polyGramHashes61(df.sparkSession, textCol, n)
+      if (hash64) PolyHash.polyGramHashes61(textCol, n)
       else when(size(toks) >= n,
         transform(sequence(lit(0), size(toks) - n), i =>
           array_join(slice(toks, i + 1, lit(n)), " ")))
@@ -150,7 +150,7 @@ object Divergence {
     // n_p/n_q while their tokens still inflated v_union
     val cnt = df.filter(isBCol.isNotNull)
       .select(sourceCol.as("source"), b.as("__b"),
-        explode(PolyHash.polyGramHashes61(df.sparkSession, textCol, 1))
+        explode(PolyHash.polyGramHashes61(textCol, 1))
           .as("__h"))
       .groupBy(col("source"), col("__h"))
       .agg(sum(lit(1L) - col("__b")).as("__cp"), sum(col("__b")).as("__cq"))
@@ -202,7 +202,7 @@ object Divergence {
     import graft.operators.EvalMetrics.microRound6
     val cnt = df
       .select(sourceCol.as("source"),
-        explode(PolyHash.polyGramHashes61(df.sparkSession, textCol, 1))
+        explode(PolyHash.polyGramHashes61(textCol, 1))
           .as("__h"))
       .groupBy(col("source"), col("__h"))
       .agg(count(lit(1)).as("__c"))
@@ -232,7 +232,7 @@ object Divergence {
   def klBySource(df: DataFrame, sourceCol: Column, textCol: Column): DataFrame = {
     val cntS = df
       .select(sourceCol.as("source"),
-        explode(PolyHash.polyGramHashes(df.sparkSession, textCol, 1)).as("h"))
+        explode(PolyHash.polyGramHashes(textCol, 1)).as("h"))
       .groupBy(col("source"), col("h")).agg(count(lit(1)).as("c_sw"))
       .localCheckpoint()
     val cntG = cntS.groupBy(col("h"))

@@ -43,8 +43,8 @@ object Dsir {
     */
   private def gramHashes(df: DataFrame, textCol: Column): Column =
     concat(
-      PolyHash.polyGramHashes(df.sparkSession, textCol, 1),
-      PolyHash.polyGramHashes(df.sparkSession, textCol, 2))
+      PolyHash.polyGramHashes(textCol, 1),
+      PolyHash.polyGramHashes(textCol, 2))
 
   /** Bucket histogram of a corpus slice: `dim` longs of driver state.
     * Map-side partial aggregation means ≤ `dim` rows per partition reach

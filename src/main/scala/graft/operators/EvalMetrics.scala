@@ -1059,7 +1059,7 @@ object EvalMetrics {
     // caller's projection, duplicating an expensive candidate expression
     // into the starved scan stage (measured: most of q278's wall)
     val statRow = base.select((gNames.map(col) ++ Seq(col("__id"),
-      explode(array(graft.functions.BleuDocStats.expr(spark,
+      explode(array(graft.functions.BleuDocStats.expr(
         col("__cand"), col("__ref")))).as("__st"))): _*)
       .filter(col("__st").isNotNull)
     def idGated(f: String): Column =

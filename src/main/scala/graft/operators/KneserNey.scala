@@ -72,7 +72,7 @@ object KneserNey {
     */
   def bigramPairs(df: DataFrame, textCol: Column): Column =
     TextFunctions.bindOnce(
-      PolyHash.polyGramHashes(df.sparkSession, textCol, 1)) { h =>
+      PolyHash.polyGramHashes(textCol, 1)) { h =>
       when(size(h) >= 2,
         transform(sequence(lit(1), size(h) - 1),
           i => element_at(h, i) * Pack + element_at(h, i + 1)))

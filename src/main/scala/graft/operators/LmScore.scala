@@ -25,17 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object LmScore {
 
-  /** Character n-grams of `textCol` as an array column (empty when the
-    * text is shorter than `n` — guarded: Spark's `sequence` would
-    * otherwise generate a DESCENDING range). String form, kept for
-    * API/spec readability — the model/score paths below work on HASHES.
-    */
-  def charNgrams(textCol: Column, n: Int): Column =
-    when(length(textCol) >= n,
-      transform(sequence(lit(1), length(textCol) - (n - 1)),
-        i => textCol.substr(i, lit(n))))
-      .otherwise(array().cast("array<string>"))
-
   /** Packed (h3 << 31 | h2) trigram/prefix hash pairs — ONE compiled pass
     * per row (graft.functions.CharTrigramHashes): the 3-char strings
     * never leave the row, so every downstream shuffle carries 8-byte

@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
 object QualityClassifier {
 
   /** Per-token feature bucket: portable poly31 string hash mod dim. */
-  private def bucket(spark: SparkSession, tok: Column, dim: Int): Column =
-    pmod(graft.functions.PolyHash.polyStringHash(spark, tok), lit(dim.toLong))
+  private def bucket(tok: Column, dim: Int): Column =
+    pmod(graft.functions.PolyHash.polyStringHash(tok), lit(dim.toLong))
 
   /** Seeded per-mille weight of a bucket: Knuth multiplicative hash onto
     * [-1000, 1000] — pure integer arithmetic, replayed by the oracle.
@@ -41,7 +41,7 @@ object QualityClassifier {
     pmod(pmod(b * lit(2654435761L), lit(2147483647L)), lit(2001L)) - lit(1000L)
 
   /** Sum of per-token per-mille weights (exact integer). */
-  private def weightSum(spark: SparkSession, textCol: Column, dim: Int,
+  private def weightSum(textCol: Column, dim: Int,
       weightsPerMille: Option[Array[Int]]): Column = {
     val toks = TextFunctions.tokens(textCol)
     val w: Column => Column = weightsPerMille match {
@@ -51,7 +51,7 @@ object QualityClassifier {
         b => element_at(lut, (b + 1).cast("int"))
       case None => seededWeight
     }
-    aggregate(toks, lit(0L), (acc, t) => acc + w(bucket(spark, t, dim)))
+    aggregate(toks, lit(0L), (acc, t) => acc + w(bucket(t, dim)))
   }
 
   /** The [[score]] output as ONE struct COLUMN (n_tokens, logit, keep)
@@ -65,7 +65,7 @@ object QualityClassifier {
       dim: Int = 4096, threshold: Double = 0.0,
       weightsPerMille: Option[Array[Int]] = None): Column = {
     val n = TextFunctions.tokenCount(textCol)
-    val sums = weightSum(spark, textCol, dim, weightsPerMille)
+    val sums = weightSum(textCol, dim, weightsPerMille)
     // 6-dp rounding in EXACT integer micro-units, half away from zero:
     // round() on the double quotient hits representation boundaries
     // where engines disagree by 1e-6 (found by the sf0.1 oracle sweep —

@@ -80,7 +80,7 @@ object Sampling {
   def groupAwareSplit(
       df: DataFrame, group: Column, weights: Seq[(String, Int)],
       buckets: Int = 100, salt: Long = 0L): DataFrame = {
-    val h = graft.functions.PolyHash.polyStringHash(df.sparkSession, group)
+    val h = graft.functions.PolyHash.polyStringHash(group)
     df.withColumn("bucket", hashBucket(h, buckets, salt))
       .withColumn("split", splitFromBucket(weights, buckets))
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -114,21 +115,10 @@ object Similarity {
     centroids
   }
 
-  /** Registry bridge for the compiled probe (graft.functions.IvfBuckets);
-    * the name carries a CONTENT digest of the codebook + nprobe (the
-    * PqOps.codebookDigest discipline) — a 32-bit hashCode collides by
-    * pigeonhole across enough codebooks, and createOrReplaceTempFunction
-    * last-wins would silently bind an earlier Column to the wrong one.
-    */
-  private def ivfBucketsCol(vec: Column, centroids: Seq[Seq[Double]], nprobe: Int): Column = {
-    val name = s"graft_ivf_buckets_${graft.functions.IvfBuckets.digest(centroids)}_$nprobe"
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).foreach {
-        _.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, exprs => graft.functions.IvfBuckets(exprs.head, centroids, nprobe), "built-in")
-      }
-    call_function(name, vec)
-  }
+  /** Column for the compiled probe (graft.functions.IvfBuckets). */
+  private def ivfBucketsCol(vec: Column, centroids: Seq[Seq[Double]], nprobe: Int): Column =
+    GraftColumnBridge.column(
+      graft.functions.IvfBuckets(GraftColumnBridge.expression(vec), centroids, nprobe))
 
   /** Nearest-centroid bucket id (centroids pre-normalized → dot = cosine). */
   def ivfBucket(vec: Column, centroids: Seq[Seq[Double]]): Column =

@@ -77,7 +77,7 @@ object Sketches {
     require(cmClash.isEmpty,
       s"group columns must not be named: ${cmClash.mkString(", ")}")
     val mults = cmMultipliers(depth)
-    val h = PolyHash.polyStringHash(df.sparkSession, item)
+    val h = PolyHash.polyStringHash(item)
     df.select(groupCols :+ h.as("__h"): _*)
       .select(col("*"), explode(array((0 until depth).map(d => struct(
         lit(d).as("d"), cmIndex(col("__h"), d, mults(d), width).as("idx"))): _*))
@@ -102,7 +102,7 @@ object Sketches {
     // carrying its own d/idx/cnt must not become an ambiguous reference
     val regs = registers.select(col("d").as("__cm_d"),
       col("idx").as("__cm_idx"), col("cnt").as("__cm_cnt"))
-    val h = PolyHash.polyStringHash(probes.sparkSession, item)
+    val h = PolyHash.polyStringHash(item)
     probes
       // per-row id so duplicate probe rows keep their multiplicity
       // through the depth-regroup (never output, order-free)

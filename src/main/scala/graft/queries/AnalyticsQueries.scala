@@ -307,7 +307,7 @@ object AnalyticsQueries {
     // bits); compiled one-pass expression, value-checked by the oracle.
     "q46_simhash" -> ((s, dir) => {
       docs(s, dir).select(col("doc_id"),
-        graft.functions.PolyHash.polySimHash(s, col("text")).as("simhash"))
+        graft.functions.PolyHash.polySimHash(col("text")).as("simhash"))
     }),
 
     // Hyperplane-LSH signature (signed random projections, Charikar

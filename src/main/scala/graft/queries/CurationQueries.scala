@@ -129,7 +129,7 @@ object CurationQueries {
         .select(col("doc_id"),
           explode(lines).as("__line"))
         .select(col("doc_id"),
-          graft.functions.PolyHash.polyStringHash(s, col("__line")).as("h"))
+          graft.functions.PolyHash.polyStringHash(col("__line")).as("h"))
         .distinct()
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= 3).select(col("h"))
@@ -166,7 +166,7 @@ object CurationQueries {
       val dec = regexp_replace(col("text"), "a", "a\u0301")
       docs(s, dir)
         .select(col("lang"), dec.as("__dec"))
-        .withColumn("__norm", NfcNormalize.expr(s, col("__dec")))
+        .withColumn("__norm", NfcNormalize.expr(col("__dec")))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("__norm") =!= col("__dec"), 1).otherwise(0)).as("n_changed"),
@@ -233,7 +233,7 @@ object CurationQueries {
         .select((col("doc_id") + 2000000L).as("doc_id"), col("lang"), col("text"))
       val all = d.unionByName(mutated).unionByName(verbatim)
         .withColumn("__canon",
-          graft.functions.CanonicalText.expr(s, col("text")))
+          graft.functions.CanonicalText.expr(col("text")))
       Dedup.softDedupWeights(all, col("__canon"))
         .select(col("doc_id"), col("lang"), col("n_dups"),
           round(col("weight"), 6).as("weight"))
@@ -250,7 +250,7 @@ object CurationQueries {
         regexp_replace(col("text"), "a", "A\u0301").as("text"))
       d.unionByName(mutated)
         .withColumn("__canon",
-          graft.functions.CanonicalText.expr(s, col("text")))
+          graft.functions.CanonicalText.expr(col("text")))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("text")).as("n_unique_raw"),
@@ -279,7 +279,7 @@ object CurationQueries {
       docs(s, dir)
         .select(col("lang"), moji.as("__moji"))
         .withColumn("__fixed",
-          graft.functions.FixMojibake.expr(s, col("__moji")))
+          graft.functions.FixMojibake.expr(col("__moji")))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("__fixed") =!= col("__moji"), 1).otherwise(0))
@@ -298,7 +298,7 @@ object CurationQueries {
         .otherwise(col("text"))
       docs(s, dir)
         .select(col("doc_id"), col("lang"),
-          graft.functions.ScriptProfile.expr(s, txt).as("p"))
+          graft.functions.ScriptProfile.expr(txt).as("p"))
         .select(col("doc_id"), col("lang"),
           col("p.n_latin").as("n_latin"), col("p.n_cjk").as("n_cjk"),
           col("p.n_digit").as("n_digit"), col("p.n_space").as("n_space"),
@@ -317,7 +317,7 @@ object CurationQueries {
       docs(s, dir)
         .select(col("lang"), aug.as("__aug"))
         .withColumn("__red",
-          graft.functions.RedactCardNumbers.expr(s, col("__aug")))
+          graft.functions.RedactCardNumbers.expr(col("__aug")))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("__red") =!= col("__aug"), 1).otherwise(0)).as("n_redacted"),

@@ -429,7 +429,7 @@ object FixtureQueries {
         .groupBy(col("prefecture_code"))
         .agg(count(lit(1)).as("n_records"),
           sum(length(col("block"))).as("sum_chars"),
-          sum(graft.functions.PolyHash.polyStringHash(s, col("block"))).as("fp"))
+          sum(graft.functions.PolyHash.polyStringHash(col("block"))).as("fp"))
     }),
 
     // S4 typed cells (r6 verdict #5): date-formatted serials round-trip

@@ -312,7 +312,7 @@ object StringQueries {
         .otherwise(col("props"))
       t(s, dir, "events")
         .withColumn("cleaned",
-          graft.functions.LenientJsonClean.lenientJsonClean(s, wrapped))
+          graft.functions.LenientJsonClean.lenientJsonClean(wrapped))
         .withColumn("k", get_json_object(col("cleaned"), "$.k").cast("int"))
         .groupBy(pmod(col("k"), lit(5)).as("k_mod"))
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))

@@ -313,14 +313,4 @@ object Warc {
         }
       }(encoder)
   }
-
-  /** Read a directory of .warc / .warc.gz shards through Spark's binaryFile
-    * source straight into [[parseWarc]] — the real-ingestion entry point
-    * (one task per shard; tune `spark.sql.files.maxPartitionBytes` for
-    * shard size).
-    */
-  def readWarcFiles(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    parseWarc(
-      spark.read.format("binaryFile").load(path)
-        .select(xxhash64(col("path")).as("file_id"), col("content").as("payload")))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -39,16 +39,6 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("value_sum"))
-
-  /** Sliding windows (width, slide). */
-  def slidingCounts(
-      events: DataFrame, width: String, slide: String,
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
 
   /** Built-in session windows (gap-based) with watermark. */
   def sessionWindowCounts(
@@ -128,12 +118,12 @@ object StreamingOps {
     val spark = docs.sparkSession
     docs
       .withColumn("__hs",
-        graft.functions.PolyHash.polyShingleHashes(spark, col(textCol), shingleSize))
+        graft.functions.PolyHash.polyShingleHashes(col(textCol), shingleSize))
       .filter(size(col("__hs")) > 0)
       .withColumn("__sig", graft.functions.MinHashSig.expr(col("__hs"), numHashes))
       .select(col(idCol), col(tsCol),
         posexplode(graft.functions.PolyHash
-          .polyBandBuckets(spark, col("__sig"), bands, numHashes / bands)))
+          .polyBandBuckets(col("__sig"), bands, numHashes / bands)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
   }
@@ -637,15 +627,4 @@ object StreamingOps {
           col(rightTs) >= col(leftTs) &&
           col(rightTs) <= col(leftTs) + expr(s"INTERVAL $horizon"))
   }
-
-  /** Rate-capped incremental file ingest — the scraper-pacing analog
-    * (semaphore/backoff → maxFilesPerTrigger + checkpointed progress).
-    */
-  def pacedParquetStream(
-      spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(path)
 }

@@ -15,11 +15,14 @@ object GraftDatasetBridge {
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 }
 
-/** Bridge to the package-private Column ⇄ Expression converters — lets a
-  * compiled kernel expression become a Column WITHOUT the per-call
-  * SparkSession.active + functionRegistry round trip (and without a
-  * session at all: hot-path Column builders like `TextFunctions.tokens`
-  * have no session in scope). Same seam `functions._` itself uses.
+/** The one way a compiled kernel becomes a Column:
+  * `GraftColumnBridge.column(Kernel(GraftColumnBridge.expression(c), params…))`.
+  * Wraps the package-private Column ⇄ Expression converters, the same seam
+  * `functions._` itself uses. The kernel and its parameters are bound into
+  * the Column when it is built, so binding needs no session and never
+  * touches a function registry; two Columns over different state can never
+  * resolve to each other's kernel. SQL names for kernels are defined only
+  * in [[graft.core.GraftExtensions]].
   */
 object GraftColumnBridge {
   def column(

@@ -18,7 +18,7 @@ class CurationSpec extends AnyFunSuite {
     val df = Seq("hello world", "", "a", "Ünïcødé — テスト 😀", "x" * 500)
       .toDF("s")
     val rows = df.select(
-      PolyHash.polyStringHash(spark, col("s")).as("compiled"),
+      PolyHash.polyStringHash(col("s")).as("compiled"),
       TextFunctions.tokenHash(col("s")).as("hof")).collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
@@ -90,7 +90,7 @@ class CurationSpec extends AnyFunSuite {
       "s\u0323\u0307",         // its fully decomposed form
       ""
     ).toDF("s")
-    val out = df.select(NfcNormalize.expr(spark, col("s")).as("n"))
+    val out = df.select(NfcNormalize.expr(col("s")).as("n"))
       .as[String].collect()
     assert(out(0) == "\u00e1 la carte")
     assert(out(1) == "\u00e1 la carte")
@@ -103,7 +103,7 @@ class CurationSpec extends AnyFunSuite {
   test("NfcNormalize handles nulls and supplementary characters") {
     val smile = new String(Character.toChars(0x1F600))
     val df = Seq(Option(smile + " a\u0301"), None).toDF("s")
-    val out = df.select(NfcNormalize.expr(spark, col("s")).as("n")).collect()
+    val out = df.select(NfcNormalize.expr(col("s")).as("n")).collect()
     assert(out.map(_.isNullAt(0)).count(identity) == 1)
     assert(out.flatMap(r => Option(r.getString(0))).head == smile + " \u00e1")
   }

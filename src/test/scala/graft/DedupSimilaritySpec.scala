@@ -84,7 +84,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("text"))
       .unionByName(Seq("", "   ", "one two", "a b c a b c a b c").toDF("text"))
     val diff = docs.select(
-        graft.functions.PolyHash.polyShingleHashes(spark, col("text"), 3).as("compiled"),
+        graft.functions.PolyHash.polyShingleHashes(col("text"), 3).as("compiled"),
         graft.functions.PolyHash.polyShingleHashesComposable(col("text"), 3).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
@@ -94,11 +94,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("compiled band buckets == composable per-slice fold on real signatures") {
     val docs = graft.core.Tables.load(spark, SparkTestSession.Sf0001, "documents")
     val sig = docs.select(
-        graft.functions.PolyHash.polyShingleHashes(spark, col("text"), 3).as("hs"))
+        graft.functions.PolyHash.polyShingleHashes(col("text"), 3).as("hs"))
       .filter(size(col("hs")) > 0)
       .select(graft.functions.MinHashSig.expr(col("hs"), 32).as("sig"))
     val diff = sig.select(
-        graft.functions.PolyHash.polyBandBuckets(spark, col("sig"), 8, 4).as("compiled"),
+        graft.functions.PolyHash.polyBandBuckets(col("sig"), 8, 4).as("compiled"),
         array((0 until 8).map { b =>
           graft.functions.PolyHash.bandBucket(slice(col("sig"), b * 4 + 1, 4))
         }: _*).as("composable"))
@@ -112,7 +112,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("text"))
       .unionByName(Seq("", "   ", "one").toDF("text"))
     val diff = docs.select(
-        graft.functions.PolyHash.polySimHash(spark, col("text")).as("compiled"),
+        graft.functions.PolyHash.polySimHash(col("text")).as("compiled"),
         graft.functions.PolyHash.polySimHashComposable(col("text")).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
@@ -122,7 +122,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("portable simhash: near-dups differ in few bits, unrelated docs in many") {
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     val sig = base.select(col("doc_id"),
-        graft.functions.PolyHash.polySimHash(spark, col("text")).as("s"))
+        graft.functions.PolyHash.polySimHash(col("text")).as("s"))
       .as[(Long, Long)].collect().toMap
     assert(hamming(sig(0L), sig(3L)) == 0)       // exact dup → identical signature
     assert(hamming(sig(0L), sig(1L)) <= 12)      // near-dup → close
@@ -358,7 +358,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .select(col("text"))
       .unionByName(Seq("", "   ", "one two", "a b c a b c a b c").toDF("text"))
     val diff = docs.select(
-        graft.functions.PolyHash.polyGramHashes(spark, col("text"), 4).as("compiled"),
+        graft.functions.PolyHash.polyGramHashes(col("text"), 4).as("compiled"),
         graft.functions.PolyHash.polyGramHashesComposable(col("text"), 4).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
@@ -381,7 +381,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val k = 8
     for (t <- texts) {
       val got = Seq(t).toDF("text")
-        .select(graft.functions.PolyHash.polyGramHashes61(spark, col("text"), k).as("hs"))
+        .select(graft.functions.PolyHash.polyGramHashes61(col("text"), k).as("hs"))
         .as[Seq[Long]].head()
       val toks = t.trim.split("\\s+").toSeq
       val want =
@@ -762,5 +762,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
     (1L to 4L).foreach(i => assert(pairs.contains((i, i + 100L)), s"twin $i"))
     assert(!pairs.exists(p => p._1 >= 1000L || p._2 >= 1000L),
       "boilerplate cluster must be frequency-capped out")
+  }
+
+  test("polyDropFlagged: flagged sets with equal Arrays.hashCode each keep their own state") {
+    import graft.functions.PolyHash
+    val line = "the quick brown fox jumps over the lazy dog"
+    val df = Seq(Seq(line)).toDF("lines")
+    val h = df.select(PolyHash.polyStringHash(element_at(col("lines"), 1))).as[Long].head()
+    val flaggedA = Array(h)
+    val flaggedB = Array((1L << 32) | (h ^ 1)) // same low word after the hi ^ lo fold
+    assert(java.util.Arrays.hashCode(flaggedA) == java.util.Arrays.hashCode(flaggedB))
+    // both Columns exist before either resolves: a binding keyed on that
+    // hash would run B's state for both
+    val dropA = PolyHash.polyDropFlagged(col("lines"), flaggedA)
+    val dropB = PolyHash.polyDropFlagged(col("lines"), flaggedB)
+    val row = df.select(dropA.as("a"), dropB.as("b")).head()
+    assert(row.getSeq[String](0).isEmpty, "A flags the line's hash, so it drops it")
+    assert(row.getSeq[String](1) == Seq(line), "B flags another hash, so it keeps the line")
   }
 }

@@ -18,8 +18,8 @@ class DsirSpec extends AnyFunSuite {
     */
   private def hofSum(text: org.apache.spark.sql.Column, delta: Array[Long]) = {
     val grams = concat(
-      PolyHash.polyGramHashes(spark, text, 1),
-      PolyHash.polyGramHashes(spark, text, 2))
+      PolyHash.polyGramHashes(text, 1),
+      PolyHash.polyGramHashes(text, 2))
     val lut = typedLit(delta.toSeq)
     aggregate(grams, lit(0L),
       (acc, h) => acc + element_at(lut, pmod(h, lit(dim.toLong)).cast("int") + 1))
@@ -35,8 +35,8 @@ class DsirSpec extends AnyFunSuite {
         DsirScore.expr(col("text"), delta.toSeq).as("k"),
         hofSum(col("text"), delta).as("hs"),
         size(concat(
-          PolyHash.polyGramHashes(spark, col("text"), 1),
-          PolyHash.polyGramHashes(spark, col("text"), 2))).as("hn"))
+          PolyHash.polyGramHashes(col("text"), 1),
+          PolyHash.polyGramHashes(col("text"), 2))).as("hn"))
       .filter(not(col("k.sum_fp") <=> col("hs")) ||
         not(col("k.n_grams") <=> col("hn")))
       .count()

@@ -711,7 +711,7 @@ class EvalMetricsSpec extends AnyFunSuite {
       }).zipWithIndex.map { case ((c, r), i) => (i.toLong, c, r) }
     val out = cases.toDF("id", "cand", "ref")
       .select(col("id"), graft.functions.BleuDocStats.expr(
-        spark, col("cand"), col("ref")).as("st"))
+        col("cand"), col("ref")).as("st"))
       .select(col("id"), col("st.*")).collect()
       .map(r => r.getLong(0) -> r).toMap
     cases.foreach { case (id, c, r) =>

@@ -72,7 +72,7 @@ class KneserNeySpec extends AnyFunSuite {
   test("bigramPairs packs adjacent word hashes (shift-30 recoverable)") {
     val df = Seq("alpha beta gamma").toDF("text")
     val words = df.select(graft.functions.PolyHash.polyGramHashes(
-      spark, col("text"), 1)).as[Seq[Long]].collect().head
+      col("text"), 1)).as[Seq[Long]].collect().head
     val pairs = df.select(KneserNey.bigramPairs(df, col("text")))
       .as[Seq[Long]].collect().head
     assert(pairs == Seq(

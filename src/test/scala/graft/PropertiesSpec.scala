@@ -45,12 +45,12 @@ class PropertiesSpec extends AnyFunSuite {
       Seq("", " ", "\t\n", "a", "a a a a a a")
     val df = texts.toDF("text")
     val shingleDiff = df.select(
-        graft.functions.PolyHash.polyShingleHashes(spark, col("text"), 3).as("c"),
+        graft.functions.PolyHash.polyShingleHashes(col("text"), 3).as("c"),
         graft.functions.PolyHash.polyShingleHashesComposable(col("text"), 3).as("s"))
       .filter(not(col("c") <=> col("s"))).count()
     assert(shingleDiff == 0)
     val simDiff = df.select(
-        graft.functions.PolyHash.polySimHash(spark, col("text")).as("c"),
+        graft.functions.PolyHash.polySimHash(col("text")).as("c"),
         graft.functions.PolyHash.polySimHashComposable(col("text")).as("s"))
       .filter(not(col("c") <=> col("s"))).count()
     assert(simDiff == 0)

@@ -20,6 +20,22 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(one(tokenCount(lit("   "))) == 0)
   }
 
+  test("P5 page-number lines match isPageNumberLine, body lines do not") {
+    Seq("- 12 -", "第 3 页", "Page 4 of 9").foreach { l =>
+      assert(one(isPageNumberLine(lit(l))) == true, l)
+    }
+    Seq("Page one", "The committee met on 12 May to review page 4 of the plan.")
+      .foreach(l => assert(one(isPageNumberLine(lit(l))) == false, l))
+  }
+
+  test("P4 noise lines match isNoiseLine by prefix, body lines do not") {
+    Seq("Copyright 2024 Example Press", "  版权所有 · 某某出版社").foreach { l =>
+      assert(one(isNoiseLine(lit(l))) == true, l)
+    }
+    Seq("Page one", "The committee met on 12 May; copyright law was not discussed.")
+      .foreach(l => assert(one(isNoiseLine(lit(l))) == false, l))
+  }
+
   test("shingles are ordered k-grams") {
     assert(one(shingles(lit("a b c d"), 3)) == Seq("a b c", "b c d"))
     assert(one(shingles(lit("a b"), 3)) == Seq())

@@ -33,7 +33,7 @@ class TextRepairSpec extends AnyFunSuite {
   test("canonical variants collapse to one dedup key (column path)") {
     val df = Seq("The Quick Fox", "the  quick fox", "THE QUICK FOX",
       "Thé Quick Fox").toDF("s")
-    val keys = df.select(CanonicalText.expr(spark, col("s")).as("c"))
+    val keys = df.select(CanonicalText.expr(col("s")).as("c"))
       .as[String].collect().toSet
     assert(keys == Set("the quick fox"))
   }
@@ -69,7 +69,7 @@ class TextRepairSpec extends AnyFunSuite {
 
   test("column path repairs and passes nulls") {
     val df = Seq(Option("cafÃ©"), Option("ok"), None).toDF("s")
-    val out = df.select(FixMojibake.expr(spark, col("s")).as("f")).collect()
+    val out = df.select(FixMojibake.expr(col("s")).as("f")).collect()
     assert(out.map(r => Option(r.getString(0))).toSet ==
       Set(Some("café"), Some("ok"), None))
   }
