@@ -1079,7 +1079,6 @@ object Stress {
     * hits occur.
     */
   private def blocklistReceipts(
-      spark: org.apache.spark.sql.SparkSession,
       texts: org.apache.spark.sql.DataFrame, t: Long): Unit = {
     def blockPats(k: Int): Seq[String] =
       (0 until k).map(i =>
@@ -3165,7 +3164,7 @@ object Stress {
               j => concat(lit("w"), pmod(col("id") * (j + 7L), lit(997)))), " ")
               .as("text"))
           .write.mode("overwrite").parquet(dir)
-        blocklistReceipts(spark, spark.read.parquet(dir), t)
+        blocklistReceipts(spark.read.parquet(dir), t)
       } finally rmrf(dir)
       spark.stop()
       return
@@ -3239,7 +3238,7 @@ object Stress {
         .agg(sum(col("r.top_frac")), sum(col("r.dup_frac"))).collect()
     }
 
-    blocklistReceipts(spark, texts, t)
+    blocklistReceipts(texts, t)
 
     val m = math.max(n / 10, 1000000L)
     val vecs = spark.range(0, m, 1, 32).select(col("id").as("vec_id"),

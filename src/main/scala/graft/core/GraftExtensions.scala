@@ -2,14 +2,15 @@ package graft.core
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: wire the engine's custom Catalyst surface
   * into any session via
   * `spark.sql.extensions=graft.core.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`), making `lenient_json_clean`
-  * and the shingle hashers available to pure-SQL users without touching
-  * the function registry manually.
+  * `.withExtensions(new GraftExtensions)`), making `lenient_json_clean`,
+  * the shingle hashers and the `rrf_score` aggregate available to
+  * pure-SQL users without touching the function registry manually.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -84,5 +85,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "hyperplane_sig_wide_64"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         graft.functions.HyperplaneSigWords(exprs.head, 64, 62, 2)))
+    // RRF fold Σ 1/(k + rank), k = Rrf.DefaultK, as a SQL aggregate
+    e.injectFunction((
+      FunctionIdentifier("rrf_score"),
+      new ExpressionInfo(classOf[graft.operators.RrfAggregator].getName,
+        "rrf_score"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        org.apache.spark.sql.execution.aggregate.ScalaAggregator(exprs,
+          new graft.operators.RrfAggregator(graft.operators.Rrf.DefaultK),
+          ExpressionEncoder[Long](), ExpressionEncoder[Double](),
+          aggregatorName = Some("rrf_score"))))
   }
 }

@@ -25,17 +25,10 @@ object TextFunctions {
     */
   def tokens(c: Column): Column =
     // compiled byte-scan kernel (r14) — bit-identical to the composable
-    // `filter(split(trim(c), "\\s+"), x => x =!= "")` (see [[WsTokens]]
-    // and the equivalence spec)
+    // `filter(split(trim(c), "\\s+"), x => x =!= "")` (see [[WsTokens]];
+    // the equivalence spec keeps that form as its reference)
     org.apache.spark.sql.classic.GraftColumnBridge.column(
       WsTokens(org.apache.spark.sql.classic.GraftColumnBridge.expression(c)))
-
-  /** The composable SPEC form of [[tokens]] — kept as the readable
-    * definition; the equivalence spec asserts the kernel matches it
-    * byte-for-byte on adversarial and golden-corpus inputs.
-    */
-  def tokensComposable(c: Column): Column =
-    filter(split(trim(c), "\\s+"), x => x =!= "")
 
   /** Evaluate `c` ONCE per row and reference it through a lambda
     * variable. Expensive shared subexpressions referenced from several

@@ -91,12 +91,13 @@ object Graph {
     * deterministic variant; feed graphs where every node links out (q145's
     * synthetic graph does) when mass conservation matters.
     *
-    * Scale posture: outdeg is joined to the edge list ONCE up front and
-    * the (src, dst, outdeg) triple cached; each iteration is one
-    * edges⋈ranks equi-join + one dst-keyed aggregation — both shuffles on
-    * node ids, stable across rounds so AQE coalesces them. Ranks are
-    * localCheckpoint'ed per round (constant-size plan at any iteration
-    * count — same lineage-truncation contract as the CC loop).
+    * Scale posture: outdeg is attached to the edge list ONCE up front (a
+    * src-keyed window) and the (src, dst, outdeg) triple cached; each
+    * iteration is one edges⋈ranks equi-join + one dst-keyed aggregation
+    * — both shuffles on node ids, stable across rounds so AQE coalesces
+    * them. Ranks are localCheckpoint'ed per round (constant-size plan at
+    * any iteration count — same lineage-truncation contract as the CC
+    * loop).
     *
     * @return (id, rank_fp) — the fixed-point rank after `iterations`
     *   rounds; rank_fp/scale is the conventional value. The frame is
@@ -138,40 +139,24 @@ object Graph {
     val base = (1000L - dampingPerMille) * scale / 1000L
     val e = edges.select(srcCol.cast("long").as("__src"),
       dstCol.cast("long").as("__dst"), weightCol.cast("long").as("__w"))
-    val deg = e.groupBy(col("__src")).agg(sum(col("__w")).as("__deg"))
     // Plan gate (the hits() discipline — one bounded limit+count probe,
     // compactEdgeLimit = 0 skips it): small graphs run the whole damped
-    // recurrence in the compiled PageRankKernel. The probe frame is the
-    // CONTRIBUTING edge set (both endpoints known — edges the loop drops
-    // at its rank-join / left-join anyway), each edge carrying its src's
-    // FULL outdegree exactly like the loop's degree frame; nodes outside
-    // every kept edge receive nothing, so they are constant `base` after
-    // round 1 and the final left join fills them.
-    // NOTE the probe re-executes the edge subtree once — callers whose
-    // edge build is expensive relative to its output (textRank's corpus
-    // tokenize collapsing to a vocabulary-bounded pair frame) should
-    // hand in a materialized edge frame; callers that KNOW the graph is
-    // large should pass compactEdgeLimit = 0.
+    // recurrence in the compiled PageRankKernel ([[pageRankCompact]]).
+    // The probe frame is the CONTRIBUTING edge set (both endpoints known
+    // — edges the loop drops at its rank-join / left-join anyway).
+    // NOTE the probe re-executes the edge subtree once — callers that
+    // already know the edge count (textRank reads it off its one
+    // materializing job) decide themselves and pass compactEdgeLimit = 0.
     if (compactEdgeLimit > 0) {
       val ids = nodes.select(idCol.cast("long").as("id"))
-      val eContrib = e
+      val eContrib = withOutDegree(e)
         .join(ids.select(col("id").as("__src")), Seq("__src"), "left_semi")
         .join(ids.select(col("id").as("__dst")), Seq("__dst"), "left_semi")
-        .join(deg, Seq("__src"))
       val probeN = math.min(compactEdgeLimit + 1, Int.MaxValue.toLong).toInt
-      if (eContrib.limit(probeN).count() <= compactEdgeLimit) {
-        val unit = eContrib.agg(collect_list(struct(col("__src"),
-          col("__dst"), col("__w"), col("__deg"))).as("__e"))
-        val scores = unit.select(explode(
-            graft.functions.PageRankKernel.expr(col("__e"),
-              lit(iterations), lit(dampingPerMille), lit(scale))).as("__s"))
-          .select(col("__s.id").as("id"), col("__s.rank_fp").as("rank_fp"))
-        return ids.join(scores, Seq("id"), "left")
-          .select(col("id"),
-            coalesce(col("rank_fp"), lit(base)).as("rank_fp"))
-      }
+      if (eContrib.limit(probeN).count() <= compactEdgeLimit)
+        return pageRankCompact(ids, eContrib, iterations, dampingPerMille, scale)
     }
-    val contribEdges = e.join(deg, Seq("__src")).persist()
+    val contribEdges = withOutDegree(e).persist()
     var ranks = nodes.select(idCol.cast("long").as("id"))
       .withColumn("rank_fp", lit(scale))
     var persisted: DataFrame = null
@@ -196,84 +181,117 @@ object Graph {
     ranks
   }
 
+  /** The compact branch shared by [[pageRankWeighted]] and [[textRank]]:
+    * the whole recurrence in one [[graft.functions.PageRankKernel]] call
+    * over the collected CONTRIBUTING edges (`__src`, `__dst`, `__w`,
+    * `__deg` — both endpoints known nodes, `__deg` the src's FULL
+    * weighted outdegree exactly like the loop's degree frame). Nodes
+    * outside every edge receive nothing, so they are constant `base`
+    * after round 1 and the final left join fills them.
+    *
+    * @param nodes the frame to score: an `id` column plus any columns
+    *   to carry along (textRank passes its dictionary, so the scores
+    *   join the tokens directly)
+    * @return `nodes`' columns plus `rank_fp`
+    */
+  private def pageRankCompact(
+      nodes: DataFrame, eContrib: DataFrame, iterations: Int,
+      dampingPerMille: Int, scale: Long): DataFrame = {
+    val base = (1000L - dampingPerMille) * scale / 1000L
+    val unit = eContrib.agg(collect_list(struct(col("__src"),
+      col("__dst"), col("__w"), col("__deg"))).as("__e"))
+    val scores = unit.select(explode(
+        graft.functions.PageRankKernel.expr(col("__e"),
+          lit(iterations), lit(dampingPerMille), lit(scale))).as("__s"))
+      .select(col("__s.id").as("id"), col("__s.rank_fp").as("__rank"))
+    nodes.join(scores, Seq("id"), "left")
+      .withColumn("rank_fp", coalesce(col("__rank"), lit(base)))
+      .drop("__rank")
+  }
+
+  /** (`__src`, `__dst`, `__w`) edges, each with its src's Σw outdegree
+    * as `__deg` — a window over one src-keyed exchange (no aggregate
+    * plus join-back).
+    */
+  private def withOutDegree(e: DataFrame): DataFrame =
+    e.withColumn("__deg", sum(col("__w")).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("__src"))))
+
   /** TextRank keyword extraction (Mihalcea & Tarau 2004) — [[pageRank]]
     * composed over the token co-occurrence graph: tokens are nodes,
     * co-occurrence within `window` positions is an (undirected) edge, and
-    * the corpus keywords are the top-PageRank tokens. Pure composition:
-    * the co-occurrence build is `lead()` windows (no self-join), edge
-    * WEIGHTS are edge multiplicity (pageRank's outdegree and gather sum
-    * count duplicate edges, which IS integer-weighted PageRank), and the
+    * the corpus keywords are the top-PageRank tokens. Edge WEIGHTS are
+    * edge multiplicity (pageRank's outdegree and gather sum count
+    * duplicate edges, which IS integer-weighted PageRank), and the
     * ranking is the q145 integer recurrence — so a SQL oracle unrolls it
     * verbatim. Node ids are the portable 60-bit md5 token hash (the
     * dictionary maps back to strings; a 60-bit collision merges two
     * tokens identically in both engines).
     *
-    * Scale posture (r13 rewrite): co-occurrence pairs expand per-document
-    * from the token-hash ARRAY with codegen HOFs — the prior shape
-    * posexplode'd the corpus, localCheckpoint-materialized the
-    * token-position frame, paid a doc-keyed sort for the lead() windows,
-    * and md5-hashed BOTH sides of every exploded pair cell (2·2·window
-    * hashes per token vs exactly one now). Edges still collapse map-side
-    * to the vocabulary²-bounded weighted list BEFORE iteration; the
-    * vocabulary-bounded rank frame joins the dictionary once and the
-    * final top-k is a TakeOrdered (never a global window). Rows are
-    * independent documents (a duplicated doc id no longer interleaves
-    * positions across rows — it never meaningfully did).
+    * Scale posture: the corpus is read and tokenized ONCE. The compiled
+    * [[graft.functions.CooccurCells]] kernel turns each document into
+    * pre-aggregated (a, b, w) edge cells plus one node cell per distinct
+    * token, hashing each distinct token once per document; one
+    * aggregation collapses them to the vocabulary²-bounded weighted edge
+    * list and the vocabulary-bounded dictionary, and that frame is the
+    * operator's ONE materialization (a localCheckpoint). The edge count
+    * that picks the PageRank path is an Observation on that same job —
+    * no probe job: at most `compactEdgeLimit` edges (default 4·10⁶) run
+    * the compiled PageRankKernel inside the returned plan, larger graphs
+    * (or `compactEdgeLimit = 0`) the distributed loop. Everything after
+    * the checkpoint is vocabulary-bounded; the final top-k is a
+    * TakeOrdered (never a global window). Each row of `df` is one
+    * document.
     *
     * @return (token, rank_fp) — the `topK` highest-ranked tokens,
     *   ties broken by token ascending.
     */
   def textRank(
-      df: DataFrame, docIdCol: Column, textCol: Column, window: Int = 2,
-      iterations: Int = 3, topK: Int = 20): DataFrame = {
+      df: DataFrame, textCol: Column, window: Int = 2,
+      iterations: Int = 3, topK: Int = 20,
+      compactEdgeLimit: Long = 4000000L): DataFrame = {
     require(window >= 1 && window <= 8, s"bad window: $window")
     require(topK >= 1, s"bad topK: $topK")
-    // checkpointed: tokenization feeds BOTH the edge build and the
-    // dictionary — without the barrier the corpus re-tokenizes per path.
-    // spread() BELOW the tokenize so the HOF pair pass isn't pinned to a
-    // starved single-split scan stage; token ARRAYS (not positions)
-    // materialize — strictly smaller than the old exploded frame
-    val toks = graft.core.Parallelism.spread(
-        df.select(docIdCol.as("__doc"), textCol.as("__text")))
-      .select(graft.functions.TextFunctions.tokens(col("__text")).as("__ts"))
+    val obs = org.apache.spark.sql.Observation()
+    val graph = cooccurrenceGraph(df, textCol, window)
+      .observe(obs, count(col("b")).as("edges"))
       .localCheckpoint()
-    val h = graft.functions.TextFunctions.md5Long _
-    // hash once per token occurrence; pairs expand from the hash array
-    val hashed = toks.select(transform(col("__ts"), w => h(w)).as("__hs"))
-    // (distance, direction) cells as HOFs over the array: element i pairs
-    // with element i+d (try_element_at nulls past the end exactly where
-    // lead() was null); the a≠b and null filters are verbatim the old ones
-    val pairCells = (1 to window).flatMap { d =>
-      Seq(
-        transform(col("__hs"), (x, i) => struct(x.as("a"),
-          try_element_at(col("__hs"), i + lit(d + 1)).as("b"))),
-        transform(col("__hs"), (x, i) => struct(
-          try_element_at(col("__hs"), i + lit(d + 1)).as("a"), x.as("b"))))
-    }
-    // checkpointed: the edge frame is vocabulary²-bounded (collapsed
-    // BEFORE iteration) but its upstream is the corpus-sized tokenize +
-    // pair expansion — pageRankWeighted consumes edges twice (the
-    // compact-gate probe + the degree/collect pass), and without the
-    // barrier each consumer re-runs the whole co-occurrence build
-    val edges = hashed
-      .select(explode(flatten(array(pairCells: _*))).as("__p"))
-      .filter(col("__p.a").isNotNull && col("__p.b").isNotNull &&
-        col("__p.a") =!= col("__p.b"))
-      .select(col("__p.a").as("src"), col("__p.b").as("dst"))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      .localCheckpoint()
-    val dict = toks.select(explode(col("__ts")).as("token")).distinct()
-      .select(col("token"), h(col("token")).as("id"))
-      .localCheckpoint() // nodes, edge build upstream, and the final join
-    // node list distinct on the HASH: a (vanishingly rare) 60-bit token
-    // collision must not seed two score rows for one node id
-    val ranks = pageRankWeighted(dict.select(col("id")).distinct(), col("id"),
-      edges, col("src"), col("dst"), col("w"), iterations)
-    dict.join(ranks, Seq("id"))
-      .select(col("token"), col("rank_fp"))
+    val nEdges = obs.get("edges").asInstanceOf[Long]
+    val dict = graph.filter(col("b").isNull)
+      .select(col("token"), col("a").as("id"))
+    val e = graph.filter(col("b").isNotNull)
+      .select(col("a").as("__src"), col("b").as("__dst"), col("w").as("__w"))
+    val ranked =
+      if (compactEdgeLimit > 0 && nEdges <= compactEdgeLimit)
+        pageRankCompact(dict, withOutDegree(e), iterations, 850, 1000000L)
+      else {
+        // node list distinct on the HASH: a (vanishingly rare) 60-bit
+        // token collision must not seed two score rows for one node id
+        val ids = dict.select(col("id")).distinct()
+        dict.join(pageRankWeighted(ids, col("id"), e, col("__src"),
+          col("__dst"), col("__w"), iterations, compactEdgeLimit = 0),
+          Seq("id"))
+      }
+    ranked.select(col("token"), col("rank_fp"))
       .orderBy(col("rank_fp").desc, col("token").asc)
       .limit(topK)
   }
+
+  /** The corpus co-occurrence graph before materialization: (a, b, token,
+    * w) rows — an edge row per distinct (a, b) hash pair (token null, w
+    * its corpus multiplicity) and a dictionary row per distinct (a,
+    * token) (b and w null). `Parallelism.spread` sits BELOW the kernel
+    * so the per-document pass is not pinned to a starved single-split
+    * scan.
+    */
+  private[graft] def cooccurrenceGraph(
+      df: DataFrame, textCol: Column, window: Int): DataFrame =
+    graft.core.Parallelism.spread(df.select(textCol.as("__text")))
+      .select(explode(graft.functions.CooccurCells.expr(
+        graft.functions.TextFunctions.tokens(col("__text")), window)).as("__c"))
+      .groupBy(col("__c.a").as("a"), col("__c.b").as("b"),
+        col("__c.token").as("token"))
+      .agg(sum(col("__c.w")).as("w"))
 
   /** HITS hubs & authorities (Kleinberg 1999) over a directed link graph —
     * PageRank's sibling ranking slot: a page is a good AUTHORITY when good

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** fastText-shaped linear text quality classifier — the MODEL-based
@@ -61,7 +61,7 @@ object QualityClassifier {
     * instead of joining [[score]]'s frame back on id (the r14
     * scoredLabeled fix: two corpus-wide joins became zero).
     */
-  def scoreStruct(spark: SparkSession, textCol: Column,
+  def scoreStruct(textCol: Column,
       dim: Int = 4096, threshold: Double = 0.0,
       weightsPerMille: Option[Array[Int]] = None): Column = {
     val n = TextFunctions.tokenCount(textCol)
@@ -102,8 +102,7 @@ object QualityClassifier {
   def score(df: DataFrame, idCol: Column, textCol: Column,
       dim: Int = 4096, threshold: Double = 0.0,
       weightsPerMille: Option[Array[Int]] = None): DataFrame = {
-    val out = scoreStruct(df.sparkSession, textCol, dim, threshold,
-      weightsPerMille)
+    val out = scoreStruct(textCol, dim, threshold, weightsPerMille)
     df.select(idCol.as("id"), out.as("__qc"))
       .select(col("id"), col("__qc.n_tokens").as("n_tokens"),
         col("__qc.logit").as("logit"), col("__qc.keep").as("keep"))

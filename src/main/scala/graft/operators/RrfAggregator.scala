@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** X3 — the RRF fold as a reusable typed Aggregator, registered as a UDAF
-  * so the SQL surface can write `rrf_score(rank)` directly
-  * (retrieve.py:153-181 semantics: Σ 1/(k + rank), k = 60).
+/** X3 — the RRF fold as a reusable typed Aggregator, injected as the
+  * `rrf_score` UDAF by [[graft.core.GraftExtensions]] so the SQL surface
+  * can write `rrf_score(rank)` directly (retrieve.py:153-181 semantics:
+  * Σ 1/(k + rank), k = 60).
   *
   * The DataFrame path (`Rrf.fuse`) stays the preferred form — a native
   * sum expression keeps partial aggregation and codegen; this Aggregator
@@ -19,9 +20,4 @@ class RrfAggregator(k: Int) extends Aggregator[Long, Double, Double] {
   override def finish(acc: Double): Double = acc
   override def bufferEncoder: Encoder[Double] = Encoders.scalaDouble
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-}
-
-object RrfAggregator {
-  def register(spark: SparkSession, name: String = "rrf_score", k: Int = Rrf.DefaultK): Unit =
-    spark.udf.register(name, org.apache.spark.sql.functions.udaf(new RrfAggregator(k)))
 }

@@ -105,7 +105,7 @@ object EvalQueries {
     // consumer queries' multi-reference shapes.
     val d = docs(s, dir)
     d.select(col("doc_id").as("id"),
-        QualityClassifier.scoreStruct(s, col("text")).as("__qc"),
+        QualityClassifier.scoreStruct(col("text")).as("__qc"),
         QualityRules.keepFlag(col("text"), minStopwords = 1)
           .cast("int").as("keep_doc"),
         col("lang"))
@@ -169,7 +169,7 @@ object EvalQueries {
         d.select(
           QualityRules.keepFlag(col("text"), minStopwords = 1)
             .cast("int").as("keep_doc"),
-          QualityClassifier.scoreStruct(s, col("text"))
+          QualityClassifier.scoreStruct(col("text"))
             .getField("keep").as("keep")),
         col("keep_doc"), col("keep"))
     }),

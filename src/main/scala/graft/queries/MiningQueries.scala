@@ -307,9 +307,9 @@ object MiningQueries {
     }),
 
     // TextRank keywords: pageRank composed over the token co-occurrence
-    // graph (lead-window pairs, multiplicity = weight), top-20 by rank.
+    // graph (in-window token pairs, multiplicity = weight), top-20 by rank.
     "q241_textrank" -> ((s, dir) =>
-      Graph.textRank(docs(s, dir), col("doc_id"), col("text"),
+      Graph.textRank(docs(s, dir), col("text"),
         window = 2, iterations = 3, topK = 20)),
 
     // Theil–Sen robust revenue-trend slope per priority over the WEEKLY

@@ -1,0 +1,48 @@
+package graft
+
+import graft.functions.TextFunctions
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+/** Composable reference forms of compiled kernels. They are the readable
+  * definitions the kernels replaced, kept only as spec oracles.
+  */
+object ReferenceTwins {
+
+  /** [[TextFunctions.tokens]] as built-in expressions: whitespace split,
+    * empty fragments dropped ([[graft.functions.WsTokens]] must match it
+    * byte for byte).
+    */
+  def tokensComposable(c: Column): Column =
+    filter(split(trim(c), "\\s+"), x => x =!= "")
+
+  /** TextRank's co-occurrence edges as higher-order functions over each
+    * document's token-hash array: element i pairs with element i+d for
+    * every d in 1..window (`try_element_at` is null past the end), both
+    * directions, hash-equal and null pairs dropped, then counted per
+    * (src, dst). [[graft.functions.CooccurCells]] must produce the same
+    * weighted edge multiset.
+    */
+  def textRankEdges(df: DataFrame, textCol: Column, window: Int): DataFrame = {
+    val hashed = df.select(transform(TextFunctions.tokens(textCol),
+      w => TextFunctions.md5Long(w)).as("__hs"))
+    val pairCells = (1 to window).flatMap { d =>
+      Seq(
+        transform(col("__hs"), (x, i) => struct(x.as("a"),
+          try_element_at(col("__hs"), i + lit(d + 1)).as("b"))),
+        transform(col("__hs"), (x, i) => struct(
+          try_element_at(col("__hs"), i + lit(d + 1)).as("a"), x.as("b"))))
+    }
+    hashed
+      .select(explode(flatten(array(pairCells: _*))).as("__p"))
+      .filter(col("__p.a").isNotNull && col("__p.b").isNotNull &&
+        col("__p.a") =!= col("__p.b"))
+      .select(col("__p.a").as("src"), col("__p.b").as("dst"))
+      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+  }
+
+  /** TextRank's dictionary: each distinct corpus token with its md5 id. */
+  def textRankDictionary(df: DataFrame, textCol: Column): DataFrame =
+    df.select(explode(TextFunctions.tokens(textCol)).as("token")).distinct()
+      .select(col("token"), TextFunctions.md5Long(col("token")).as("id"))
+}

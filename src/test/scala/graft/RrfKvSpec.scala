@@ -89,7 +89,8 @@ class RrfKvSpec extends AnyFunSuite {
   }
 
   test("RRF as a registered UDAF matches the native fuse (X3)") {
-    graft.operators.RrfAggregator.register(spark)
+    // GraftSession sessions carry GraftExtensions, which injects the name
+    assert(spark.conf.get("spark.sql.extensions").contains("graft.core.GraftExtensions"))
     Seq(("A", "x", 1L), ("A", "y", 2L), ("B", "y", 1L), ("B", "x", 2L))
       .toDF("q", "item", "rnk").createOrReplaceTempView("ranked")
     val got = spark.sql(

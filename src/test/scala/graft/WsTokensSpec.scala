@@ -18,7 +18,7 @@ class WsTokensSpec extends AnyFunSuite {
     val df = values.toDF("s")
     val rows = df.select(
       TextFunctions.tokens(col("s")).as("kernel"),
-      TextFunctions.tokensComposable(col("s")).as("hof")).collect()
+      ReferenceTwins.tokensComposable(col("s")).as("hof")).collect()
     rows.zip(values).foreach { case (r, in) =>
       val k = if (r.isNullAt(0)) null else r.getSeq[String](0)
       val h = if (r.isNullAt(1)) null else r.getSeq[String](1)
@@ -56,7 +56,7 @@ class WsTokensSpec extends AnyFunSuite {
       val d = graft.core.Tables.load(spark, dir, "documents")
       val bad = d.select(
           TextFunctions.tokens(col("text")).as("k"),
-          TextFunctions.tokensComposable(col("text")).as("h"))
+          ReferenceTwins.tokensComposable(col("text")).as("h"))
         .filter(not(col("k") <=> col("h"))).count()
       assert(bad == 0L)
     }
