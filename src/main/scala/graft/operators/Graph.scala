@@ -32,6 +32,14 @@ import org.apache.spark.sql.types.LongType
   */
 object Graph {
 
+  /** Largest edge count whose PageRank runs in the compiled
+    * [[graft.functions.PageRankKernel]] over the edge list collected into
+    * one task; larger graphs run the distributed loop. The default of
+    * [[pageRankWeighted]]'s probe gate and the bound of [[textRank]]'s
+    * observed gate.
+    */
+  val CompactEdgeLimit: Long = 4000000L
+
   /** @param nodes one row per node id (dataframe with `idCol`)
     * @param edges undirected edge list (`srcCol`, `dstCol`) — orientation
     *   is normalized internally
@@ -91,13 +99,12 @@ object Graph {
     * deterministic variant; feed graphs where every node links out (q145's
     * synthetic graph does) when mass conservation matters.
     *
-    * Scale posture: outdeg is attached to the edge list ONCE up front (a
-    * src-keyed window) and the (src, dst, outdeg) triple cached; each
-    * iteration is one edges⋈ranks equi-join + one dst-keyed aggregation
-    * — both shuffles on node ids, stable across rounds so AQE coalesces
-    * them. Ranks are localCheckpoint'ed per round (constant-size plan at
-    * any iteration count — same lineage-truncation contract as the CC
-    * loop).
+    * Scale posture: outdeg is joined to the edge list ONCE up front and
+    * the (src, dst, outdeg) triple cached; each iteration is one
+    * edges⋈ranks equi-join + one dst-keyed aggregation — both shuffles on
+    * node ids, stable across rounds so AQE coalesces them. Ranks are
+    * localCheckpoint'ed per round (constant-size plan at any iteration
+    * count — same lineage-truncation contract as the CC loop).
     *
     * @return (id, rank_fp) — the fixed-point rank after `iterations`
     *   rounds; rank_fp/scale is the conventional value. The frame is
@@ -131,7 +138,7 @@ object Graph {
       edges: DataFrame, srcCol: Column, dstCol: Column, weightCol: Column,
       iterations: Int = 5,
       dampingPerMille: Int = 850, scale: Long = 1000000L,
-      compactEdgeLimit: Long = 4000000L): DataFrame = {
+      compactEdgeLimit: Long = CompactEdgeLimit): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampingPerMille >= 0 && dampingPerMille <= 1000,
       s"dampingPerMille must be in [0, 1000], got $dampingPerMille")
@@ -139,24 +146,28 @@ object Graph {
     val base = (1000L - dampingPerMille) * scale / 1000L
     val e = edges.select(srcCol.cast("long").as("__src"),
       dstCol.cast("long").as("__dst"), weightCol.cast("long").as("__w"))
+    val deg = outDegree(e)
     // Plan gate (the hits() discipline — one bounded limit+count probe,
     // compactEdgeLimit = 0 skips it): small graphs run the whole damped
     // recurrence in the compiled PageRankKernel ([[pageRankCompact]]).
     // The probe frame is the CONTRIBUTING edge set (both endpoints known
-    // — edges the loop drops at its rank-join / left-join anyway).
+    // — edges the loop drops at its rank-join / left-join anyway), each
+    // edge carrying its src's FULL outdegree exactly like the loop's
+    // degree frame.
     // NOTE the probe re-executes the edge subtree once — callers that
     // already know the edge count (textRank reads it off its one
     // materializing job) decide themselves and pass compactEdgeLimit = 0.
     if (compactEdgeLimit > 0) {
       val ids = nodes.select(idCol.cast("long").as("id"))
-      val eContrib = withOutDegree(e)
+      val eContrib = e
         .join(ids.select(col("id").as("__src")), Seq("__src"), "left_semi")
         .join(ids.select(col("id").as("__dst")), Seq("__dst"), "left_semi")
+        .join(deg, Seq("__src"))
       val probeN = math.min(compactEdgeLimit + 1, Int.MaxValue.toLong).toInt
       if (eContrib.limit(probeN).count() <= compactEdgeLimit)
         return pageRankCompact(ids, eContrib, iterations, dampingPerMille, scale)
     }
-    val contribEdges = withOutDegree(e).persist()
+    val contribEdges = e.join(deg, Seq("__src")).persist()
     var ranks = nodes.select(idCol.cast("long").as("id"))
       .withColumn("rank_fp", lit(scale))
     var persisted: DataFrame = null
@@ -203,19 +214,18 @@ object Graph {
     val scores = unit.select(explode(
         graft.functions.PageRankKernel.expr(col("__e"),
           lit(iterations), lit(dampingPerMille), lit(scale))).as("__s"))
-      .select(col("__s.id").as("id"), col("__s.rank_fp").as("__rank"))
+      .select(col("__s.id").as("id"), col("__s.rank_fp").as("rank_fp"))
     nodes.join(scores, Seq("id"), "left")
-      .withColumn("rank_fp", coalesce(col("__rank"), lit(base)))
-      .drop("__rank")
+      .select(nodes.columns.toSeq.map(col) :+
+        coalesce(col("rank_fp"), lit(base)).as("rank_fp"): _*)
   }
 
-  /** (`__src`, `__dst`, `__w`) edges, each with its src's Σw outdegree
-    * as `__deg` — a window over one src-keyed exchange (no aggregate
-    * plus join-back).
+  /** (`__src`, `__deg`): each src's Σw outdegree over (`__src`, `__dst`,
+    * `__w`) edges — the small aggregate both PageRank paths join back
+    * onto the edge list.
     */
-  private def withOutDegree(e: DataFrame): DataFrame =
-    e.withColumn("__deg", sum(col("__w")).over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("__src"))))
+  private def outDegree(e: DataFrame): DataFrame =
+    e.groupBy(col("__src")).agg(sum(col("__w")).as("__deg"))
 
   /** TextRank keyword extraction (Mihalcea & Tarau 2004) — [[pageRank]]
     * composed over the token co-occurrence graph: tokens are nodes,
@@ -235,44 +245,23 @@ object Graph {
     * aggregation collapses them to the vocabulary²-bounded weighted edge
     * list and the vocabulary-bounded dictionary, and that frame is the
     * operator's ONE materialization (a localCheckpoint). The edge count
-    * that picks the PageRank path is an Observation on that same job —
-    * no probe job: at most `compactEdgeLimit` edges (default 4·10⁶) run
-    * the compiled PageRankKernel inside the returned plan, larger graphs
-    * (or `compactEdgeLimit = 0`) the distributed loop. Everything after
-    * the checkpoint is vocabulary-bounded; the final top-k is a
-    * TakeOrdered (never a global window). Each row of `df` is one
-    * document.
+    * that picks the PageRank path is observed on that same job — no
+    * probe job: at most [[CompactEdgeLimit]] edges run the compiled
+    * PageRankKernel inside the returned plan, larger graphs the
+    * distributed loop. Everything after the checkpoint is
+    * vocabulary-bounded; the final top-k is a TakeOrdered (never a global
+    * window). Each row of `df` is one document.
     *
     * @return (token, rank_fp) — the `topK` highest-ranked tokens,
     *   ties broken by token ascending.
     */
   def textRank(
       df: DataFrame, textCol: Column, window: Int = 2,
-      iterations: Int = 3, topK: Int = 20,
-      compactEdgeLimit: Long = 4000000L): DataFrame = {
+      iterations: Int = 3, topK: Int = 20): DataFrame = {
     require(window >= 1 && window <= 8, s"bad window: $window")
     require(topK >= 1, s"bad topK: $topK")
-    val obs = org.apache.spark.sql.Observation()
-    val graph = cooccurrenceGraph(df, textCol, window)
-      .observe(obs, count(col("b")).as("edges"))
-      .localCheckpoint()
-    val nEdges = obs.get("edges").asInstanceOf[Long]
-    val dict = graph.filter(col("b").isNull)
-      .select(col("token"), col("a").as("id"))
-    val e = graph.filter(col("b").isNotNull)
-      .select(col("a").as("__src"), col("b").as("__dst"), col("w").as("__w"))
-    val ranked =
-      if (compactEdgeLimit > 0 && nEdges <= compactEdgeLimit)
-        pageRankCompact(dict, withOutDegree(e), iterations, 850, 1000000L)
-      else {
-        // node list distinct on the HASH: a (vanishingly rare) 60-bit
-        // token collision must not seed two score rows for one node id
-        val ids = dict.select(col("id")).distinct()
-        dict.join(pageRankWeighted(ids, col("id"), e, col("__src"),
-          col("__dst"), col("__w"), iterations, compactEdgeLimit = 0),
-          Seq("id"))
-      }
-    ranked.select(col("token"), col("rank_fp"))
+    val (graph, nEdges) = checkpointCooccurrence(df, textCol, window)
+    rankCooccurrence(graph, nEdges, iterations)
       .orderBy(col("rank_fp").desc, col("token").asc)
       .limit(topK)
   }
@@ -292,6 +281,48 @@ object Graph {
       .groupBy(col("__c.a").as("a"), col("__c.b").as("b"),
         col("__c.token").as("token"))
       .agg(sum(col("__c.w")).as("w"))
+
+  /** [[cooccurrenceGraph]] materialized by ONE localCheckpoint job, with
+    * its edge count read off that job: the checkpoint executes `cells`'
+    * own physical plan, whose CollectMetrics node accumulates the count
+    * (read from the plan directly, so no session-wide Observation
+    * listener is installed).
+    *
+    * @return (the checkpointed graph, its number of edge rows)
+    */
+  private[graft] def checkpointCooccurrence(
+      df: DataFrame, textCol: Column, window: Int): (DataFrame, Long) = {
+    val cells = cooccurrenceGraph(df, textCol, window)
+      .observe("textrank_edges", count(col("b")).as("edges"))
+    val graph = cells.localCheckpoint()
+    (graph, cells.queryExecution.observedMetrics("textrank_edges").getLong(0))
+  }
+
+  /** (token, rank_fp) for every token of a checkpointed
+    * [[cooccurrenceGraph]] with `nEdges` edge rows: the compact
+    * PageRankKernel path up to [[CompactEdgeLimit]] edges, the
+    * distributed [[pageRankWeighted]] loop (no second probe) above it.
+    */
+  private[graft] def rankCooccurrence(
+      graph: DataFrame, nEdges: Long, iterations: Int): DataFrame = {
+    val dict = graph.filter(col("b").isNull)
+      .select(col("token"), col("a").as("id"))
+    val e = graph.filter(col("b").isNotNull)
+      .select(col("a").as("__src"), col("b").as("__dst"), col("w").as("__w"))
+    val ranked =
+      if (nEdges <= CompactEdgeLimit)
+        pageRankCompact(dict, e.join(outDegree(e), Seq("__src")),
+          iterations, 850, 1000000L)
+      else {
+        // node list distinct on the HASH: a (vanishingly rare) 60-bit
+        // token collision must not seed two score rows for one node id
+        val ids = dict.select(col("id")).distinct()
+        dict.join(pageRankWeighted(ids, col("id"), e, col("__src"),
+          col("__dst"), col("__w"), iterations, compactEdgeLimit = 0),
+          Seq("id"))
+      }
+    ranked.select(col("token"), col("rank_fp"))
+  }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a directed link graph —
     * PageRank's sibling ranking slot: a page is a good AUTHORITY when good

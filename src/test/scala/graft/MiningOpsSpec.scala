@@ -158,29 +158,38 @@ class MiningOpsSpec extends AnyFunSuite {
     (i.toLong, (0 until 25).map(j => s"w${(i * 7 + j * j) % 31}").mkString(" "))
   }.toDF("doc_id", "text")
 
-  test("textRank: the loop path (compactEdgeLimit = 0) == the compact path") {
+  private def ranking(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+
+  test("textRank: the observed edge count gates the path; loop == compact") {
     val docs = textRankCorpus
-    def run(limit: Long) = Graph.textRank(docs, col("text"),
-        window = 3, iterations = 3, topK = 50, compactEdgeLimit = limit)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-    val compact = run(4000000L)
+    val (graph, nEdges) = Graph.checkpointCooccurrence(docs, col("text"), 3)
+    // the count read off the checkpoint job is the graph's edge count
+    assert(nEdges == graph.filter(col("b").isNotNull).count())
+    assert(nEdges > 0 && nEdges <= Graph.CompactEdgeLimit)
+    def rank(n: Long) = Graph.rankCooccurrence(graph, n, 3)
+      .orderBy(col("rank_fp").desc, col("token").asc)
+    val compact = ranking(rank(nEdges))
     assert(compact.size == 31)
-    assert(run(0L) == compact)
-    // a limit below the edge count takes the loop path by the gate
-    assert(run(1L) == compact)
+    // a count above the limit takes the distributed loop
+    assert(ranking(rank(Graph.CompactEdgeLimit + 1)) == compact)
+    assert(ranking(Graph.textRank(docs, col("text"),
+      window = 3, iterations = 3, topK = 50)) == compact)
   }
 
   test("textRank: an empty corpus ranks nothing on either path") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    Seq(0L, 4000000L).foreach { limit =>
-      assert(Graph.textRank(empty, col("text"),
-        compactEdgeLimit = limit).collect().isEmpty)
+    val (graph, nEdges) = Graph.checkpointCooccurrence(empty, col("text"), 2)
+    assert(nEdges == 0L)
+    Seq(0L, Graph.CompactEdgeLimit + 1).foreach { n =>
+      assert(Graph.rankCooccurrence(graph, n, 3).collect().isEmpty)
     }
+    assert(Graph.textRank(empty, col("text")).collect().isEmpty)
   }
 
   test("textRank: the builder runs one materialization and no probe job") {
     // the corpus is tokenized once into the checkpointed co-occurrence
-    // frame and the path gate reads that job's Observation: any
+    // frame and the path gate reads the count observed on that job: any
     // re-introduced probe, count or extra checkpoint adds a job here
     val docs = textRankCorpus.localCheckpoint()
     def build() = Graph.textRank(docs, col("text"))
