@@ -32,7 +32,6 @@ object Bench {
 
   def corpusPipeline(spark: SparkSession, outDir: String): Long = {
     import graft.sources.KvBlock
-    KvBlock.ensureLastWin(spark)
     val raw = spark.read.format("graft-paged")
       .option("pages", "6272").option("pagesize", "10")
       .option("pagesperpartition", "64").load()
@@ -58,7 +57,8 @@ object Bench {
     // execution of the pipeline, no cache pressure.
     val obs = org.apache.spark.sql.Observation("corpus_n")
     // coalescePartitions=false: this corpus is single-province (maximally
-    // skewed) — tasks must shard the hot partition value, not collapse it
+    // skewed) — tasks must shard the hot partition value, not collapse it;
+    // the sink coalesces to one write task per core
     KvBlock.writePartitioned(
       filtered.observe(obs, count(lit(1)).as("n")),
       col("block"), Seq("province_code"), outDir, coalescePartitions = false)

@@ -41,7 +41,8 @@ object GraftSession {
       // roundtrip instead of raising (TextFunctions.decodeChain)
       .config("spark.sql.legacy.codingErrorAction", "true")
       .config("spark.sql.legacy.javaCharsets", "true")
-      // KV blocks with repeated keys keep the last value (dict semantics)
+      // map builders keep the last value of a repeated key (dict semantics;
+      // the KV-block parser applies the same rule on its own)
       .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       // the engine's SQL function surface (lenient_json_clean,
       // shingle_hashes_k, graft_multi_format_date, ...) on every session

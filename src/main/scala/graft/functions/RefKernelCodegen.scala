@@ -15,6 +15,10 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongTyp
   * a null result (e.g. MinHashSig on an empty array). Measured on the ANN
   * scan (CosineSim's dedicated doGenCode, same mechanism): 30-40% off
   * q42/q43/q56 wall-clock at sf0.1.
+  *
+  * A mixing class that keeps `nullable = child.nullable` (KvParse) must
+  * never return null for a non-null input: its non-nullable form has no
+  * null slot.
   */
 trait RefKernelCodegen extends UnaryExpression {
 
@@ -35,13 +39,19 @@ trait RefKernelCodegen extends UnaryExpression {
         case BooleanType => s"((java.lang.Boolean) $tmp).booleanValue()"
         case _ => s"(${CodeGenerator.javaType(dataType)}) $tmp"
       }
-      s"""
-         |Object $tmp = $ref.kernelEval($childVal);
-         |if ($tmp == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $unwrap;
-         |}
-       """.stripMargin
+      if (nullable)
+        s"""
+           |Object $tmp = $ref.kernelEval($childVal);
+           |if ($tmp == null) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  ${ev.value} = $unwrap;
+           |}
+         """.stripMargin
+      else
+        s"""
+           |Object $tmp = $ref.kernelEval($childVal);
+           |${ev.value} = $unwrap;
+         """.stripMargin
     })
 }

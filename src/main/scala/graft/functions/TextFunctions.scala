@@ -373,12 +373,12 @@ object TextFunctions {
     * instead of raising — the round-trip equality is then the validity
     * check. Falls back to a lossy decode of the last charset.
     */
-  /** Session prerequisites for [[decodeChain]], set explicitly by name
-    * (the KvBlock.ensureLastWin idiom): `codingErrorAction` makes
-    * malformed `decode` substitute instead of raise (the round-trip check
-    * then detects it), `javaCharsets` admits GBK. GraftSession sets both
-    * at build time; callers on a foreign session invoke this ONCE,
-    * knowingly — decodeChain itself never mutates the session.
+  /** Session prerequisites for [[decodeChain]], set explicitly by name:
+    * `codingErrorAction` makes malformed `decode` substitute instead of
+    * raise (the round-trip check then detects it), `javaCharsets` admits
+    * GBK. GraftSession sets both at build time; callers on a foreign
+    * session invoke this ONCE, knowingly — decodeChain itself never
+    * mutates the session.
     */
   def ensureDecodeChainConfs(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.codingErrorAction", "true")

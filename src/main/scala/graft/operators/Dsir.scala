@@ -41,7 +41,7 @@ object Dsir {
   /** The gram-bucket stream as columns — composition form used for model
     * training; MUST stay hash-identical to [[DsirScore]]'s fold (spec-pinned).
     */
-  private def gramHashes(df: DataFrame, textCol: Column): Column =
+  private def gramHashes(textCol: Column): Column =
     concat(
       PolyHash.polyGramHashes(textCol, 1),
       PolyHash.polyGramHashes(textCol, 2))
@@ -53,7 +53,7 @@ object Dsir {
   def bucketCounts(df: DataFrame, textCol: Column, dim: Int = DefaultDim): Array[Long] = {
     require(dim >= 2, s"dim must be >= 2, got $dim")
     val rows = df
-      .select(explode(gramHashes(df, textCol)).as("h"))
+      .select(explode(gramHashes(textCol)).as("h"))
       .select(pmod(col("h"), lit(dim.toLong)).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("n"))
       .collect()

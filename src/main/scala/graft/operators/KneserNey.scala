@@ -70,7 +70,7 @@ object KneserNey {
     * compiled tokenize kernel runs ONCE per row, not once per
     * `element_at` reference (the SchemaValidate CASE-branch lesson).
     */
-  def bigramPairs(df: DataFrame, textCol: Column): Column =
+  def bigramPairs(textCol: Column): Column =
     TextFunctions.bindOnce(
       PolyHash.polyGramHashes(textCol, 1)) { h =>
       when(size(h) >= 2,
@@ -89,7 +89,7 @@ object KneserNey {
 
   def trainBigramModel(ref: DataFrame, textCol: Column): Model = {
     val big = ref
-      .select(explode(bigramPairs(ref, textCol)).as("vw"))
+      .select(explode(bigramPairs(textCol)).as("vw"))
       .groupBy(col("vw")).agg(count(lit(1)).as("c_vw"))
       .select(col("vw"), col("c_vw"),
         shiftright(col("vw"), 30).as("v"),
@@ -138,7 +138,7 @@ object KneserNey {
           col("n_pp") + lit(DiscountNum) * col("n1_v") * col("n1_w"))
           .as("__lg_num"))
     val dp = docs
-      .select(idCol.as("doc_id"), explode(bigramPairs(docs, textCol)).as("vw"))
+      .select(idCol.as("doc_id"), explode(bigramPairs(textCol)).as("vw"))
       .select(col("doc_id"), col("vw"),
         shiftright(col("vw"), 30).as("v"),
         col("vw").bitwiseAND(lit(Pack - 1)).as("w"))

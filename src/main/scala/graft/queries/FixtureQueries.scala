@@ -1007,7 +1007,6 @@ object FixtureQueries {
     // (coalesced sink → exactly one part file per partition value).
     "q83_kv_sink_layout" -> ((s, dir) => {
       import s.implicits._
-      KvBlock.ensureLastWin(s)
       val docs = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"))
         .withColumn("block", KvBlock.renderBlock(Seq(

@@ -286,7 +286,6 @@ object StringQueries {
     // S1 KV-block round trip: render rows to `键：值` blocks, parse back with
     // the engine's block parser, project typed fields.
     "q28_kv_roundtrip" -> ((s, dir) => {
-      KvBlock.ensureLastWin(s)
       val nation = t(s, dir, "nation")
       val region = broadcast(t(s, dir, "region"))
       val block = KvBlock.renderBlock(Seq(

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.KvParse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Reader: wholeTextFiles-free — `spark.read.text(wholetext=false)` would
   * split records across lines, so we read whole files, explode on the block
-  * delimiter, then parse each block's lines into a map. All expression-level
-  * (split/explode/map_from_entries), no UDF.
+  * delimiter, then parse each block's lines into a map with the compiled
+  * [[graft.functions.KvParse]] byte scan. No UDF, no session setting.
   *
   * Writer: partitioned text sink, one directory per (partition cols), blocks
   * re-joined with the delimiter — the S14 layout
@@ -26,7 +27,6 @@ object KvBlock {
     * half-width colon per line (retrieve.py:917-922).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    ensureLastWin(spark)
     val raw = spark.read.option("wholetext", "true").text(path)
     blocksFromText(raw, col("value")).select(col("block"), parseBlock(col("block")).as("kv"))
   }
@@ -37,7 +37,6 @@ object KvBlock {
     * `writePartitioned`, so sink layouts are queryable (q83).
     */
   def readPartitioned(spark: SparkSession, path: String): DataFrame = {
-    ensureLastWin(spark)
     val raw = spark.read.option("wholetext", "true").text(path)
     val partCols = raw.columns.filterNot(_ == "value").map(col)
     raw.select(partCols :+ explode(split(col("value"), BlockDelimiter)).as("block"): _*)
@@ -45,13 +44,6 @@ object KvBlock {
       .filter(length(col("block")) > 0)
       .withColumn("kv", parseBlock(col("block")))
   }
-
-  /** Repeated keys keep the LAST value (Python-dict semantics) — needs the
-    * session-level dedup policy; the default EXCEPTION policy would kill a
-    * job on one malformed block.
-    */
-  def ensureLastWin(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
 
   /** Explode a whole-file text column into trimmed, non-empty blocks.
     * Spark's `trim` strips spaces ONLY — newline edges around the block
@@ -63,17 +55,12 @@ object KvBlock {
       .filter(length(col("block")) > 0)
 
   /** `键：值` lines → map<string,string>; first colon wins, both `：` and `:`
-    * accepted; lines without a colon are dropped. Repeated keys keep the
-    * LAST value under `spark.sql.mapKeyDedupPolicy=LAST_WIN` (set by
-    * GraftSession / ensureLastWin — an expression-level O(n²) dedup here
-    * measured 4× slower over the 62.7k-record corpus).
+    * accepted, key and value trimmed of ASCII spaces; lines without a
+    * colon are dropped. A repeated key keeps its first position and its
+    * LAST value (Python-dict semantics) under any session dedup policy —
+    * one malformed block never kills a job. See [[graft.functions.KvParse]].
     */
-  def parseBlock(block: Column): Column =
-    map_from_entries(transform(
-      filter(split(block, "\n"), l => l.rlike("[：:]")),
-      l => struct(
-        trim(regexp_extract(l, "^([^：:]*)[：:]", 1)).as("key"),
-        trim(regexp_replace(l, "^[^：:]*[：:]", "")).as("value"))))
+  def parseBlock(block: Column): Column = KvParse.expr(block)
 
   /** Project typed columns out of the kv map with null-safe defaults (the
     * reference's dict.get(k, '') lookups).
@@ -100,9 +87,20 @@ object KvBlock {
     * Deliberately NOT a collect_list-per-partition-value single file: a hot
     * partition holding millions of records must stream through many tasks,
     * never materialize as one row (measured: the single-row variant fell
-    * over at ~6M records in one province). `repartition` on the partition
-    * columns keeps file counts low; remove it if partition values are few
-    * and huge (then tasks shard each value instead).
+    * over at ~6M records in one province).
+    *
+    *  - `coalescePartitions = true`: `repartition` on the partition columns,
+    *    one task and so one file per partition value — for many values of
+    *    moderate size.
+    *  - `coalescePartitions = false`, for few and huge values: a narrow
+    *    `coalesce` to the session's `defaultParallelism` (no shuffle; a
+    *    no-op when the input has fewer partitions). Each task streams its
+    *    share of the source partitions, so a hot value still shards across
+    *    every core. One write task per source partition instead paid a
+    *    fixed cost per task — the Hadoop configuration deserialized and an
+    *    output file set up and committed — that outweighed its work: on
+    *    the 62.7k-record corpus on 4 cores, 98 write tasks and files
+    *    became 4.
     */
   def writePartitioned(
       df: DataFrame, blockCol: Column, partitionCols: Seq[String], outPath: String,
@@ -110,7 +108,8 @@ object KvBlock {
     val rows = df.select((partitionCols.map(col) :+
       concat(blockCol, lit("\n^_^")).as("value")): _*)
     val arranged =
-      if (coalescePartitions) rows.repartition(partitionCols.map(col): _*) else rows
+      if (coalescePartitions) rows.repartition(partitionCols.map(col): _*)
+      else rows.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     arranged.write.mode("overwrite")
       .partitionBy(partitionCols: _*)
       .text(outPath)

@@ -33,7 +33,6 @@ class GoldenCorpusSweepSpec extends AnyFunSuite {
     * per-file driver loop.
     */
   private def corpus(dir: String): DataFrame = {
-    KvBlock.ensureLastWin(spark)
     spark.read.option("wholetext", "true").text(dir)
       .select(url_decode(
         regexp_extract(input_file_name(), "([^/]+)\\.txt$", 1)).as("file"),

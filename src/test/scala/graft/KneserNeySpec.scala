@@ -73,13 +73,13 @@ class KneserNeySpec extends AnyFunSuite {
     val df = Seq("alpha beta gamma").toDF("text")
     val words = df.select(graft.functions.PolyHash.polyGramHashes(
       col("text"), 1)).as[Seq[Long]].collect().head
-    val pairs = df.select(KneserNey.bigramPairs(df, col("text")))
+    val pairs = df.select(KneserNey.bigramPairs(col("text")))
       .as[Seq[Long]].collect().head
     assert(pairs == Seq(
       words(0) * KneserNey.Pack + words(1),
       words(1) * KneserNey.Pack + words(2)))
     val short = Seq("one", "", "  ").toDF("text")
-    assert(short.select(KneserNey.bigramPairs(short, col("text")))
+    assert(short.select(KneserNey.bigramPairs(col("text")))
       .as[Seq[Long]].collect().forall(_.isEmpty))
   }
 }

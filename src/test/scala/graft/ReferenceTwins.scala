@@ -16,6 +16,20 @@ object ReferenceTwins {
   def tokensComposable(c: Column): Column =
     filter(split(trim(c), "\\s+"), x => x =!= "")
 
+  /** [[graft.sources.KvBlock.parseBlock]] as built-in expressions: `\n`
+    * lines that hold a colon, each split at its first `：` or `:` and
+    * trimmed of ASCII spaces. A repeated key keeps its first position and
+    * last value only under `spark.sql.mapKeyDedupPolicy=LAST_WIN` (the
+    * GraftSession default). [[graft.functions.KvParse]] must match it
+    * entry for entry, in order.
+    */
+  def kvParseComposable(block: Column): Column =
+    map_from_entries(transform(
+      filter(split(block, "\n"), l => l.rlike("[：:]")),
+      l => struct(
+        trim(regexp_extract(l, "^([^：:]*)[：:]", 1)).as("key"),
+        trim(regexp_replace(l, "^[^：:]*[：:]", "")).as("value"))))
+
   /** TextRank's co-occurrence edges as higher-order functions over each
     * document's token-hash array: element i pairs with element i+d for
     * every d in 1..window (`try_element_at` is null past the end), both

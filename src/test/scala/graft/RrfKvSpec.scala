@@ -66,6 +66,42 @@ class RrfKvSpec extends AnyFunSuite {
     assert(dirs.exists(_.contains("province=")))
   }
 
+  /** Writes 2,000 one-line blocks from `parts` partitions over `values`
+    * partition values; returns the part-file count per value directory and
+    * the distinct ids parsed back.
+    */
+  private def kvSink(parts: Int, values: Int, coalescePartitions: Boolean): (Map[String, Int], Long) = {
+    val out = java.nio.file.Files.createTempDirectory("kvsink").toString
+    val rows = spark.range(0, 2000, 1, parts).select(
+      (col("id") % values).cast("string").as("p"),
+      KvBlock.renderBlock(Seq("id" -> col("id").cast("string"))).as("block"))
+    KvBlock.writePartitioned(rows, col("block"), Seq("p"), out, coalescePartitions)
+    val files = new java.io.File(out).listFiles.filter(_.isDirectory)
+      .map(d => d.getName -> d.listFiles.count(_.getName.startsWith("part-"))).toMap
+    val ids = KvBlock.readPartitioned(spark, out)
+      .select(KvBlock.field(col("kv"), "id")).distinct().count()
+    (files, ids)
+  }
+
+  test("KV sink, hot value: at most one write task per core, never one per source partition") {
+    val cores = spark.sparkContext.defaultParallelism
+    val (wide, wideIds) = kvSink(parts = 3 * cores, values = 1, coalescePartitions = false)
+    assert(wide.keySet == Set("p=0"))
+    assert(wide("p=0") > 1 && wide("p=0") <= cores)
+    assert(wideIds == 2000)
+    // fewer partitions than cores: coalesce is a no-op
+    val few = math.max(1, cores / 2)
+    val (narrow, narrowIds) = kvSink(parts = few, values = 1, coalescePartitions = false)
+    assert(narrow == Map("p=0" -> few))
+    assert(narrowIds == 2000)
+  }
+
+  test("KV sink, coalesced: one file per partition value") {
+    val (files, ids) = kvSink(parts = 24, values = 3, coalescePartitions = true)
+    assert(files == Map("p=0" -> 1, "p=1" -> 1, "p=2" -> 1))
+    assert(ids == 2000)
+  }
+
   test("KV render sanitizes newlines and the block delimiter inside values") {
     val hostile = "第一行\n第二行^_^机构类型：伪造"   // would split the record and inject a line
     val parsed = Seq(hostile).toDF("v")
