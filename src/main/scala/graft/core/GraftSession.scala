@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory with the engine's scale-oriented defaults.
   *
@@ -67,14 +68,48 @@ object GraftSession {
 /** Loaders for the driver's synthetic tables (TESTDATA.md). Plain parquet
   * scans so Catalyst's column pruning + predicate pushdown apply; never
   * cache here — callers decide reuse.
+  *
+  * A declared catalog: every table but `events` is read with its schema
+  * stated in [[declared]], so opening it starts no Spark job (an inferred
+  * `spark.read.parquet` runs one schema-inference job per open, ~120–180
+  * ms at sf0.1). It is metadata only: no data or result is reused. A spec
+  * checks each declared schema against the inferred one in every sf dir,
+  * so drift fails loudly. `events` stays inferred because its `ts` column
+  * has shipped in two physical generations (see [[events]]): the loader
+  * must read the file's own type to pick the conversion.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The read schema of every table except `events`, as Spark infers it
+    * from the parquet files (naive timestamps read as TimestampType under
+    * the session's NTZ-inference-off config).
+    */
+  private[graft] val declared: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
+      "n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(spark, dir) else spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") events(spark, dir)
+    else declared.get(name).fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$dir/$name.parquet")
 
   /** The events table's `ts` column has shipped in two generations of the
     * driver testdata: TIMESTAMP(NANOS), which Spark only reads as raw longs

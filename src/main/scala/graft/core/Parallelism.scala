@@ -21,19 +21,20 @@ object Parallelism {
   /** Round-robin `df` across the session's default parallelism when its
     * planned partitioning is narrower; identity otherwise.
     *
-    * The probe reads the planned RDD's partition count, which is
-    * plan-time metadata ONLY for exchange-free plans — under AQE,
-    * `df.rdd` on a plan with an exchange EXECUTES the upstream stages as
-    * eager jobs (measured: a double-run of the caller's whole input
-    * build). So any plan that already contains a width-establishing
-    * operator (repartition, aggregate, join, window, sort, distinct) is
-    * returned untouched without probing: those plan a full-width
-    * exchange by construction.
+    * The probe reads the partition count of the frame's own planned RDD
+    * (`queryExecution.toRdd`; `df.rdd` would plan a second, deserializing
+    * query first). That count is plan-time metadata ONLY for
+    * exchange-free plans — under AQE, probing a plan with an exchange
+    * EXECUTES the upstream stages as eager jobs (measured: a double-run
+    * of the caller's whole input build). So any plan that already
+    * contains a width-establishing operator (repartition, aggregate,
+    * join, window, sort, distinct) is returned untouched without
+    * probing: those plan a full-width exchange by construction.
     */
   def spread(df: DataFrame): DataFrame = {
     // Deduplicate (Dataset.dropDuplicates/distinct), GlobalLimit and
     // Expand are width-establishing too (r14, ADVICE fix): missing them
-    // meant the df.rdd probe on such a frame eagerly executed the
+    // meant the probe on such a frame eagerly executed the
     // upstream plan under AQE — the exact double-run this guard exists
     // to prevent.
     val alreadyWide = df.queryExecution.logical.exists {
@@ -43,7 +44,7 @@ object Parallelism {
       case _ => false
     }
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (!alreadyWide && df.rdd.getNumPartitions < target)
+    if (!alreadyWide && df.queryExecution.toRdd.getNumPartitions < target)
       df.repartition(target)
     else df
   }

@@ -2,13 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Column
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused HITS kernel: the ENTIRE fixed-point iteration of
   * [[graft.operators.Graph.hits]] (gather → max-normalize → mirrored
@@ -193,8 +194,8 @@ object HitsKernel {
 
 /** Fused weighted-PageRank kernel — [[HitsKernel]]'s sibling for
   * [[graft.operators.Graph.pageRankWeighted]] (and through it q145
-  * PageRank, q241 TextRank, q250 weighted PageRank): the whole damped
-  * integer recurrence over one bounded edge-array row.
+  * PageRank and q250 weighted PageRank): the whole damped integer
+  * recurrence over one bounded edge-array row.
   *
   * Input edges are (src, dst, w, deg) quads — already endpoint-
   * semi-joined by the caller, with `deg` the FULL weighted outdegree
@@ -290,11 +291,6 @@ object PageRankKernel {
   private[graft] def run(
       edgesArr: ArrayData, iterations: Int, dampingPerMille: Int,
       scale: Long): ArrayData = {
-    require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
-      s"dampingPerMille must be in [0, 1000], got $dampingPerMille")
-    require(scale % 1000 == 0, "scale must be a multiple of 1000")
-    val base = (1000L - dampingPerMille) * scale / 1000L
     val nE = edgesArr.numElements()
     val srcId = new Array[Long](nE)
     val dstId = new Array[Long](nE)
@@ -307,13 +303,38 @@ object PageRankKernel {
       w(i) = r.getLong(2); deg(i) = r.getLong(3)
       i += 1
     }
+    val (dense, rank) =
+      recurrence(srcId, dstId, w, deg, iterations, dampingPerMille, scale)
+    val out = new Array[Any](dense.length)
+    i = 0
+    while (i < dense.length) { out(i) = InternalRow(dense(i), rank(i)); i += 1 }
+    new GenericArrayData(out)
+  }
+
+  /** The damped integer recurrence over parallel edge arrays, shared by
+    * [[run]] and [[TextRankKernel]]: `deg(k)` is edge k's src outdegree,
+    * or `deg == null` to take it as the src's Σw over these edges.
+    *
+    * @return the edge endpoints' ids, sorted and distinct, and their
+    *   ranks after `iterations` rounds
+    */
+  private[graft] def recurrence(
+      srcId: Array[Long], dstId: Array[Long], w: Array[Long],
+      deg: Array[Long], iterations: Int, dampingPerMille: Int,
+      scale: Long): (Array[Long], Array[Long]) = {
+    require(iterations >= 1, s"iterations must be >= 1: $iterations")
+    require(dampingPerMille >= 0 && dampingPerMille <= 1000,
+      s"dampingPerMille must be in [0, 1000], got $dampingPerMille")
+    require(scale % 1000 == 0, "scale must be a multiple of 1000")
+    val base = (1000L - dampingPerMille) * scale / 1000L
+    val nE = srcId.length
     // dense ids over the edge endpoints
     val ids = new Array[Long](2 * nE)
     System.arraycopy(srcId, 0, ids, 0, nE)
     System.arraycopy(dstId, 0, ids, nE, nE)
     java.util.Arrays.sort(ids)
     var nN = 0
-    i = 0
+    var i = 0
     while (i < ids.length) {
       if (nN == 0 || ids(i) != ids(nN - 1)) { ids(nN) = ids(i); nN += 1 }
       i += 1
@@ -327,6 +348,12 @@ object PageRankKernel {
       eDst(i) = java.util.Arrays.binarySearch(dense, dstId(i))
       i += 1
     }
+    val eDeg = if (deg != null) deg else {
+      val out = new Array[Long](nN)
+      i = 0
+      while (i < nE) { out(eSrc(i)) = Math.addExact(out(eSrc(i)), w(i)); i += 1 }
+      Array.tabulate(nE)(k => out(eSrc(k)))
+    }
     val rank = new Array[Long](nN)
     java.util.Arrays.fill(rank, scale)
     val c = new Array[Long](nN)
@@ -337,7 +364,7 @@ object PageRankKernel {
       while (k < nE) {
         val d = c(eDst(k))
         c(eDst(k)) = Math.addExact(d,
-          Math.multiplyExact(w(k), rank(eSrc(k)) / deg(k)))
+          Math.multiplyExact(w(k), rank(eSrc(k)) / eDeg(k)))
         k += 1
       }
       k = 0
@@ -347,10 +374,7 @@ object PageRankKernel {
       }
       round += 1
     }
-    val out = new Array[Any](nN)
-    i = 0
-    while (i < nN) { out(i) = InternalRow(dense(i), rank(i)); i += 1 }
-    new GenericArrayData(out)
+    (dense, rank)
   }
 
   /** Column bridge. */
@@ -359,6 +383,99 @@ object PageRankKernel {
     GraftColumnBridge.column(PageRankKernel(
       GraftColumnBridge.expression(edges), GraftColumnBridge.expression(iterations),
       GraftColumnBridge.expression(dampingPerMille), GraftColumnBridge.expression(scale)))
+}
+
+/** TextRank's whole compact ranking as one compiled pass — the rank stage
+  * of [[graft.operators.Graph.textRank]]. Input is the checkpointed
+  * co-occurrence graph collected into one array of `(a, b, w, token)`
+  * rows: an edge row per weighted edge `a → b` (token null), a dictionary
+  * row per distinct `(a, token)` (b and w null). The kernel sums each
+  * src's Σw outdegree over the edge rows, runs [[PageRankKernel]]'s
+  * recurrence (the same code, [[PageRankKernel.recurrence]]) and maps
+  * EVERY dictionary row to `(token, rank_fp)`: an edge endpoint gets its
+  * computed rank, a token outside every edge gets `base`, and tokens
+  * sharing a 60-bit id share its rank. Bit-identical to PageRankKernel
+  * over edges joined to their outdegree with the dictionary left-joined
+  * to the scores, the composition it replaces (kept as a spec twin).
+  *
+  * Returns array<struct<token string, rank_fp bigint>> in dictionary-row
+  * order. Null input → null.
+  */
+case class TextRankKernel(
+    child: Expression, iterations: Int, dampingPerMille: Int, scale: Long)
+    extends UnaryExpression with RefKernelCodegen {
+
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("token", StringType, nullable = true),
+    StructField("rank_fp", LongType, nullable = false))),
+    containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "text_rank_kernel"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StructType(fs), _) if fs.toSeq.map(_.dataType) ==
+        Seq(LongType, LongType, LongType, StringType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      "text_rank_kernel requires array<struct<a bigint, b bigint, w bigint, " +
+        s"token string>>; got ${other.catalogString}")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): TextRankKernel =
+    copy(child = newChild)
+
+  override def nullSafeEval(input: Any): Any = TextRankKernel.run(
+    input.asInstanceOf[ArrayData], iterations, dampingPerMille, scale)
+}
+
+object TextRankKernel {
+
+  /** The fused rank stage (see class scaladoc). Shared by eval/codegen. */
+  private[graft] def run(
+      rows: ArrayData, iterations: Int, dampingPerMille: Int,
+      scale: Long): ArrayData = {
+    val n = rows.numElements()
+    var nE = 0
+    var i = 0
+    while (i < n) { if (!rows.getStruct(i, 4).isNullAt(1)) nE += 1; i += 1 }
+    val srcId = new Array[Long](nE)
+    val dstId = new Array[Long](nE)
+    val w = new Array[Long](nE)
+    val dictId = new Array[Long](n - nE)
+    val dictToken = new Array[UTF8String](n - nE)
+    var e = 0
+    var d = 0
+    i = 0
+    while (i < n) {
+      val r = rows.getStruct(i, 4)
+      if (r.isNullAt(1)) {
+        dictId(d) = r.getLong(0)
+        dictToken(d) = if (r.isNullAt(3)) null else r.getUTF8String(3).clone()
+        d += 1
+      } else {
+        srcId(e) = r.getLong(0); dstId(e) = r.getLong(1); w(e) = r.getLong(2)
+        e += 1
+      }
+      i += 1
+    }
+    val (dense, rank) = PageRankKernel.recurrence(
+      srcId, dstId, w, null, iterations, dampingPerMille, scale)
+    val base = (1000L - dampingPerMille) * scale / 1000L
+    val out = new Array[Any](d)
+    i = 0
+    while (i < d) {
+      val k = java.util.Arrays.binarySearch(dense, dictId(i))
+      out(i) = InternalRow(dictToken(i), if (k >= 0) rank(k) else base)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Column bridge. */
+  def expr(rows: Column, iterations: Int, dampingPerMille: Int,
+      scale: Long): Column =
+    GraftColumnBridge.column(TextRankKernel(
+      GraftColumnBridge.expression(rows), iterations, dampingPerMille, scale))
 }
 
 /** Fused synchronous-LPA kernel for

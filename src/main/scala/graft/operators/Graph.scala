@@ -32,11 +32,12 @@ import org.apache.spark.sql.types.LongType
   */
 object Graph {
 
-  /** Largest edge count whose PageRank runs in the compiled
-    * [[graft.functions.PageRankKernel]] over the edge list collected into
-    * one task; larger graphs run the distributed loop. The default of
-    * [[pageRankWeighted]]'s probe gate and the bound of [[textRank]]'s
-    * observed gate.
+  /** Largest collected row count a compact path takes into one task:
+    * [[pageRankWeighted]]'s probe gate counts edges for the compiled
+    * [[graft.functions.PageRankKernel]], [[textRank]]'s observed gate
+    * counts every graph row (edges and dictionary) for
+    * [[graft.functions.TextRankKernel]]. Larger graphs run the
+    * distributed loop.
     */
   val CompactEdgeLimit: Long = 4000000L
 
@@ -155,7 +156,7 @@ object Graph {
     // edge carrying its src's FULL outdegree exactly like the loop's
     // degree frame.
     // NOTE the probe re-executes the edge subtree once — callers that
-    // already know the edge count (textRank reads it off its one
+    // already know their size (textRank reads it off its one
     // materializing job) decide themselves and pass compactEdgeLimit = 0.
     if (compactEdgeLimit > 0) {
       val ids = nodes.select(idCol.cast("long").as("id"))
@@ -192,21 +193,19 @@ object Graph {
     ranks
   }
 
-  /** The compact branch shared by [[pageRankWeighted]] and [[textRank]]:
-    * the whole recurrence in one [[graft.functions.PageRankKernel]] call
-    * over the collected CONTRIBUTING edges (`__src`, `__dst`, `__w`,
-    * `__deg` — both endpoints known nodes, `__deg` the src's FULL
-    * weighted outdegree exactly like the loop's degree frame). Nodes
-    * outside every edge receive nothing, so they are constant `base`
-    * after round 1 and the final left join fills them.
+  /** The compact branch of [[pageRankWeighted]]: the whole recurrence in
+    * one [[graft.functions.PageRankKernel]] call over the collected
+    * CONTRIBUTING edges (`__src`, `__dst`, `__w`, `__deg` — both
+    * endpoints known nodes, `__deg` the src's FULL weighted outdegree
+    * exactly like the loop's degree frame). Nodes outside every edge
+    * receive nothing, so they are constant `base` after round 1 and the
+    * final left join fills them.
     *
-    * @param nodes the frame to score: an `id` column plus any columns
-    *   to carry along (textRank passes its dictionary, so the scores
-    *   join the tokens directly)
-    * @return `nodes`' columns plus `rank_fp`
+    * @param ids one row per node `id`
+    * @return (id, rank_fp)
     */
   private def pageRankCompact(
-      nodes: DataFrame, eContrib: DataFrame, iterations: Int,
+      ids: DataFrame, eContrib: DataFrame, iterations: Int,
       dampingPerMille: Int, scale: Long): DataFrame = {
     val base = (1000L - dampingPerMille) * scale / 1000L
     val unit = eContrib.agg(collect_list(struct(col("__src"),
@@ -215,14 +214,13 @@ object Graph {
         graft.functions.PageRankKernel.expr(col("__e"),
           lit(iterations), lit(dampingPerMille), lit(scale))).as("__s"))
       .select(col("__s.id").as("id"), col("__s.rank_fp").as("rank_fp"))
-    nodes.join(scores, Seq("id"), "left")
-      .select(nodes.columns.toSeq.map(col) :+
-        coalesce(col("rank_fp"), lit(base)).as("rank_fp"): _*)
+    ids.join(scores, Seq("id"), "left")
+      .select(col("id"), coalesce(col("rank_fp"), lit(base)).as("rank_fp"))
   }
 
   /** (`__src`, `__deg`): each src's Σw outdegree over (`__src`, `__dst`,
-    * `__w`) edges — the small aggregate both PageRank paths join back
-    * onto the edge list.
+    * `__w`) edges — the small aggregate both [[pageRankWeighted]] paths
+    * join back onto the edge list.
     */
   private def outDegree(e: DataFrame): DataFrame =
     e.groupBy(col("__src")).agg(sum(col("__w")).as("__deg"))
@@ -244,13 +242,17 @@ object Graph {
     * token, hashing each distinct token once per document; one
     * aggregation collapses them to the vocabulary²-bounded weighted edge
     * list and the vocabulary-bounded dictionary, and that frame is the
-    * operator's ONE materialization (a localCheckpoint). The edge count
-    * that picks the PageRank path is observed on that same job — no
-    * probe job: at most [[CompactEdgeLimit]] edges run the compiled
-    * PageRankKernel inside the returned plan, larger graphs the
-    * distributed loop. Everything after the checkpoint is
-    * vocabulary-bounded; the final top-k is a TakeOrdered (never a global
-    * window). Each row of `df` is one document.
+    * operator's ONE materialization (a localCheckpoint). Its row count
+    * (edges plus dictionary) picks the rank path and is observed on that
+    * same job — no probe job. Up to [[CompactEdgeLimit]] rows, the rank
+    * stage is ONE collected row: a narrow `coalesce(1)` (no exchange)
+    * gathers the graph into one task, the compiled
+    * [[graft.functions.TextRankKernel]] computes the outdegree, the
+    * recurrence and every token's score, and an explode feeds the final
+    * top-k, a TakeOrdered — so the returned plan runs as one job. The
+    * gate bounds every collected row, not only the edges, because the
+    * dictionary rides in the same row. Larger graphs run the distributed
+    * [[pageRankWeighted]] loop. Each row of `df` is one document.
     *
     * @return (token, rank_fp) — the `topK` highest-ranked tokens,
     *   ties broken by token ascending.
@@ -260,8 +262,8 @@ object Graph {
       iterations: Int = 3, topK: Int = 20): DataFrame = {
     require(window >= 1 && window <= 8, s"bad window: $window")
     require(topK >= 1, s"bad topK: $topK")
-    val (graph, nEdges) = checkpointCooccurrence(df, textCol, window)
-    rankCooccurrence(graph, nEdges, iterations)
+    val (graph, nRows) = checkpointCooccurrence(df, textCol, window)
+    rankCooccurrence(graph, nRows, iterations)
       .orderBy(col("rank_fp").desc, col("token").asc)
       .limit(topK)
   }
@@ -283,46 +285,51 @@ object Graph {
       .agg(sum(col("__c.w")).as("w"))
 
   /** [[cooccurrenceGraph]] materialized by ONE localCheckpoint job, with
-    * its edge count read off that job: the checkpoint executes `cells`'
+    * its row count read off that job: the checkpoint executes `cells`'
     * own physical plan, whose CollectMetrics node accumulates the count
     * (read from the plan directly, so no session-wide Observation
     * listener is installed).
     *
-    * @return (the checkpointed graph, its number of edge rows)
+    * @return (the checkpointed graph, its number of rows: edges plus
+    *   dictionary)
     */
   private[graft] def checkpointCooccurrence(
       df: DataFrame, textCol: Column, window: Int): (DataFrame, Long) = {
     val cells = cooccurrenceGraph(df, textCol, window)
-      .observe("textrank_edges", count(col("b")).as("edges"))
+      .observe("textrank_rows", count(lit(1)).as("rows"))
     val graph = cells.localCheckpoint()
-    (graph, cells.queryExecution.observedMetrics("textrank_edges").getLong(0))
+    (graph, cells.queryExecution.observedMetrics("textrank_rows").getLong(0))
   }
 
   /** (token, rank_fp) for every token of a checkpointed
-    * [[cooccurrenceGraph]] with `nEdges` edge rows: the compact
-    * PageRankKernel path up to [[CompactEdgeLimit]] edges, the
-    * distributed [[pageRankWeighted]] loop (no second probe) above it.
+    * [[cooccurrenceGraph]] of `nRows` rows: up to `compactRowLimit` rows
+    * the whole graph is collected into one row for the compiled
+    * [[graft.functions.TextRankKernel]]; above it the distributed
+    * [[pageRankWeighted]] loop runs (no second probe).
     */
   private[graft] def rankCooccurrence(
-      graph: DataFrame, nEdges: Long, iterations: Int): DataFrame = {
-    val dict = graph.filter(col("b").isNull)
-      .select(col("token"), col("a").as("id"))
-    val e = graph.filter(col("b").isNotNull)
-      .select(col("a").as("__src"), col("b").as("__dst"), col("w").as("__w"))
-    val ranked =
-      if (nEdges <= CompactEdgeLimit)
-        pageRankCompact(dict, e.join(outDegree(e), Seq("__src")),
-          iterations, 850, 1000000L)
-      else {
-        // node list distinct on the HASH: a (vanishingly rare) 60-bit
-        // token collision must not seed two score rows for one node id
-        val ids = dict.select(col("id")).distinct()
-        dict.join(pageRankWeighted(ids, col("id"), e, col("__src"),
+      graph: DataFrame, nRows: Long, iterations: Int,
+      compactRowLimit: Long = CompactEdgeLimit): DataFrame =
+    if (nRows <= compactRowLimit)
+      graph.coalesce(1)
+        .agg(collect_list(struct(col("a"), col("b"), col("w"), col("token")))
+          .as("__g"))
+        .select(explode(graft.functions.TextRankKernel.expr(col("__g"),
+          iterations, 850, 1000000L)).as("__r"))
+        .select(col("__r.token").as("token"), col("__r.rank_fp").as("rank_fp"))
+    else {
+      val dict = graph.filter(col("b").isNull)
+        .select(col("token"), col("a").as("id"))
+      val e = graph.filter(col("b").isNotNull)
+        .select(col("a").as("__src"), col("b").as("__dst"), col("w").as("__w"))
+      // node list distinct on the HASH: a (vanishingly rare) 60-bit
+      // token collision must not seed two score rows for one node id
+      val ids = dict.select(col("id")).distinct()
+      dict.join(pageRankWeighted(ids, col("id"), e, col("__src"),
           col("__dst"), col("__w"), iterations, compactEdgeLimit = 0),
           Seq("id"))
-      }
-    ranked.select(col("token"), col("rank_fp"))
-  }
+        .select(col("token"), col("rank_fp"))
+    }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a directed link graph —
     * PageRank's sibling ranking slot: a page is a good AUTHORITY when good

@@ -38,19 +38,18 @@ object KvBlock {
     */
   def readPartitioned(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.option("wholetext", "true").text(path)
-    val partCols = raw.columns.filterNot(_ == "value").map(col)
-    raw.select(partCols :+ explode(split(col("value"), BlockDelimiter)).as("block"): _*)
-      .withColumn("block", regexp_replace(col("block"), "^\\s+|\\s+$", ""))
-      .filter(length(col("block")) > 0)
+    val partCols = raw.columns.toSeq.filterNot(_ == "value").map(col)
+    blocksFromText(raw, col("value"), partCols)
       .withColumn("kv", parseBlock(col("block")))
   }
 
-  /** Explode a whole-file text column into trimmed, non-empty blocks.
-    * Spark's `trim` strips spaces ONLY — newline edges around the block
+  /** Explode a whole-file text column into trimmed, non-empty blocks,
+    * with the `carry` columns ahead of `block` on every row. Spark's
+    * `trim` strips spaces ONLY — newline edges around the block
     * delimiter need the regex form.
     */
-  def blocksFromText(df: DataFrame, text: Column): DataFrame =
-    df.select(explode(split(text, BlockDelimiter)).as("block"))
+  def blocksFromText(df: DataFrame, text: Column, carry: Seq[Column] = Nil): DataFrame =
+    df.select(carry :+ explode(split(text, BlockDelimiter)).as("block"): _*)
       .withColumn("block", regexp_replace(col("block"), "^\\s+|\\s+$", ""))
       .filter(length(col("block")) > 0)
 

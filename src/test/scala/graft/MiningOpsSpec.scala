@@ -161,17 +161,23 @@ class MiningOpsSpec extends AnyFunSuite {
   private def ranking(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
 
-  test("textRank: the observed edge count gates the path; loop == compact") {
+  private def ranksCompact(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.toString.contains("text_rank_kernel")
+
+  test("textRank: the observed row count gates the path; loop == compact") {
     val docs = textRankCorpus
-    val (graph, nEdges) = Graph.checkpointCooccurrence(docs, col("text"), 3)
-    // the count read off the checkpoint job is the graph's edge count
-    assert(nEdges == graph.filter(col("b").isNotNull).count())
-    assert(nEdges > 0 && nEdges <= Graph.CompactEdgeLimit)
+    val (graph, nRows) = Graph.checkpointCooccurrence(docs, col("text"), 3)
+    // the count read off the checkpoint job is the graph's row count:
+    // edges plus dictionary, every row the compact path collects
+    assert(nRows == graph.count())
+    assert(nRows > 31 && nRows <= Graph.CompactEdgeLimit)
     def rank(n: Long) = Graph.rankCooccurrence(graph, n, 3)
       .orderBy(col("rank_fp").desc, col("token").asc)
-    val compact = ranking(rank(nEdges))
+    assert(ranksCompact(rank(nRows)))
+    val compact = ranking(rank(nRows))
     assert(compact.size == 31)
     // a count above the limit takes the distributed loop
+    assert(!ranksCompact(rank(Graph.CompactEdgeLimit + 1)))
     assert(ranking(rank(Graph.CompactEdgeLimit + 1)) == compact)
     assert(ranking(Graph.textRank(docs, col("text"),
       window = 3, iterations = 3, topK = 50)) == compact)
@@ -179,12 +185,25 @@ class MiningOpsSpec extends AnyFunSuite {
 
   test("textRank: an empty corpus ranks nothing on either path") {
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val (graph, nEdges) = Graph.checkpointCooccurrence(empty, col("text"), 2)
-    assert(nEdges == 0L)
+    val (graph, nRows) = Graph.checkpointCooccurrence(empty, col("text"), 2)
+    assert(nRows == 0L)
     Seq(0L, Graph.CompactEdgeLimit + 1).foreach { n =>
       assert(Graph.rankCooccurrence(graph, n, 3).collect().isEmpty)
     }
     assert(Graph.textRank(empty, col("text")).collect().isEmpty)
+  }
+
+  test("textRank: more rows than a forced limit take the loop, even with few edges") {
+    // one two-token document and 40 one-token ones: 2 edge rows but 42
+    // dictionary rows, all of which the compact path would collect
+    val docs = (Seq("left right") ++ (1 to 40).map(i => s"solo$i")).toDF("text")
+    val (graph, nRows) = Graph.checkpointCooccurrence(docs, col("text"), 2)
+    val nEdges = graph.filter(col("b").isNotNull).count()
+    assert(nEdges == 2L && nRows == 44L)
+    val compact = Graph.rankCooccurrence(graph, nRows, 3)
+    val loop = Graph.rankCooccurrence(graph, nRows, 3, compactRowLimit = nEdges)
+    assert(ranksCompact(compact) && !ranksCompact(loop))
+    assert(ranking(loop).sorted == ranking(compact).sorted)
   }
 
   test("textRank: the builder runs one materialization and no probe job") {
@@ -194,28 +213,21 @@ class MiningOpsSpec extends AnyFunSuite {
     val docs = textRankCorpus.localCheckpoint()
     def build() = Graph.textRank(docs, col("text"))
     build().collect(): Unit // warm: codegen, not the steady-state count
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      build()
-      var last = -1
-      var waited = 0
-      while (last != jobs.get() && waited < 25) {
-        last = jobs.get(); Thread.sleep(200); waited += 1
-      }
-      // measured 2: the kernel + partial aggregation stage and the
-      // checkpoint job (the input already spans the default parallelism,
-      // so no spread stage). The builder with three checkpoints and a
-      // limit+count probe scheduled 11 here.
-      assert(jobs.get() <= 2,
-        s"textRank's builder scheduled ${jobs.get()} jobs (measured floor " +
-          "is 2); a probe or an extra materialization crept back in")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var built: org.apache.spark.sql.DataFrame = null
+    val builderJobs = SparkTestSession.jobsDuring { built = build() }
+    // measured 2: the kernel + partial aggregation stage and the
+    // checkpoint job (the input already spans the default parallelism,
+    // so no spread stage). The builder with three checkpoints and a
+    // limit+count probe scheduled 11 here.
+    assert(builderJobs <= 2,
+      s"textRank's builder scheduled $builderJobs jobs (measured floor " +
+        "is 2); a probe or an extra materialization crept back in")
+    // the compact rank stage has no exchange: coalesce(1), the kernel and
+    // the TakeOrdered run as one job (the outdegree aggregate, its join,
+    // the collect shuffle and the dictionary join scheduled 5)
+    val actionJobs = SparkTestSession.jobsDuring { built.collect(): Unit }
+    assert(actionJobs == 1,
+      s"textRank's compact rank action scheduled $actionJobs jobs, not 1")
   }
 
   // -------------------------------------------------------- concentration
@@ -607,33 +619,18 @@ class MiningOpsSpec extends AnyFunSuite {
     def run(): Unit = Journey.theilSenBlocked(df, Seq(col("k")),
       col("t"), col("y"), blockSize = 128).collect(): Unit
     run() // warm: codegen + JIT, not the steady-state count
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      run()
-      // listener bus is async — settle until no event lands for 200 ms
-      var last = -1
-      var waited = 0
-      while (last != jobs.get() && waited < 25) {
-        last = jobs.get(); Thread.sleep(200); waited += 1
-      }
-      // steady state at this shape measures 14: the internal eager
-      // stages (block checkpoint, group-map take, unit checkpoint,
-      // histogram + per-group selection passes, AQE off) plus the final
-      // collect executing the RETURNED plan under caller conf (AQE on,
-      // so its query stages submit as separate jobs). Pinned at the
-      // measured count: the pre-shave form scheduled ~1.9x this (an
-      // eager broadcast job per selection stage), which is exactly the
-      // regression this guard exists to catch.
-      assert(jobs.get() <= 14,
-        s"theilSenBlocked scheduled ${jobs.get()} jobs (measured shaved " +
-          "floor at this shape is 14); an eager stage crept back in")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = SparkTestSession.jobsDuring(run())
+    // steady state at this shape measures 14: the internal eager
+    // stages (block checkpoint, group-map take, unit checkpoint,
+    // histogram + per-group selection passes, AQE off) plus the final
+    // collect executing the RETURNED plan under caller conf (AQE on,
+    // so its query stages submit as separate jobs). Pinned at the
+    // measured count: the pre-shave form scheduled ~1.9x this (an
+    // eager broadcast job per selection stage), which is exactly the
+    // regression this guard exists to catch.
+    assert(jobs <= 14,
+      s"theilSenBlocked scheduled $jobs jobs (measured shaved " +
+        "floor at this shape is 14); an eager stage crept back in")
   }
 
   // --------------------------------------------- TheilPairScan kernel

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextFunctions
+import graft.functions.{PageRankKernel, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -59,4 +59,28 @@ object ReferenceTwins {
   def textRankDictionary(df: DataFrame, textCol: Column): DataFrame =
     df.select(explode(TextFunctions.tokens(textCol)).as("token")).distinct()
       .select(col("token"), TextFunctions.md5Long(col("token")).as("id"))
+
+  /** TextRank's compact rank stage as the composition
+    * [[graft.functions.TextRankKernel]] replaced: over a co-occurrence
+    * graph of (`a`, `b`, `w`, `token`) rows (edges have `b`, dictionary
+    * rows do not), [[graft.functions.PageRankKernel]] over the collected
+    * edges joined to their src's Σw outdegree, then every dictionary row
+    * left-joined to its id's score, `base` where it has none.
+    */
+  def textRankCompact(graph: DataFrame, iterations: Int,
+      dampingPerMille: Int = 850, scale: Long = 1000000L): DataFrame = {
+    val base = (1000L - dampingPerMille) * scale / 1000L
+    val e = graph.filter(col("b").isNotNull)
+      .select(col("a").as("__src"), col("b").as("__dst"), col("w").as("__w"))
+    val deg = e.groupBy(col("__src")).agg(sum(col("__w")).as("__deg"))
+    val scores = e.join(deg, Seq("__src"))
+      .agg(collect_list(struct(col("__src"), col("__dst"), col("__w"),
+        col("__deg"))).as("__e"))
+      .select(explode(PageRankKernel.expr(col("__e"), lit(iterations),
+        lit(dampingPerMille), lit(scale))).as("__s"))
+      .select(col("__s.id").as("id"), col("__s.rank_fp").as("rank_fp"))
+    graph.filter(col("b").isNull).select(col("token"), col("a").as("id"))
+      .join(scores, Seq("id"), "left")
+      .select(col("token"), coalesce(col("rank_fp"), lit(base)).as("rank_fp"))
+  }
 }

@@ -14,4 +14,27 @@ object SparkTestSession {
   }
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
+
+  /** The Spark jobs started while `body` runs, counted by a listener. The
+    * listener bus is asynchronous, so the count settles until no job
+    * lands for 200 ms.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1
+      var waited = 0
+      while (last != jobs.get() && waited < 25) {
+        last = jobs.get(); Thread.sleep(200); waited += 1
+      }
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
