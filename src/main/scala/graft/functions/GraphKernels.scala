@@ -312,8 +312,7 @@ object PageRankKernel {
   }
 
   /** The damped integer recurrence over parallel edge arrays, shared by
-    * [[run]] and [[TextRankKernel]]: `deg(k)` is edge k's src outdegree,
-    * or `deg == null` to take it as the src's Σw over these edges.
+    * [[run]] and [[TextRankKernel]]: `deg(k)` is edge k's src outdegree.
     *
     * @return the edge endpoints' ids, sorted and distinct, and their
     *   ranks after `iterations` rounds
@@ -348,12 +347,6 @@ object PageRankKernel {
       eDst(i) = java.util.Arrays.binarySearch(dense, dstId(i))
       i += 1
     }
-    val eDeg = if (deg != null) deg else {
-      val out = new Array[Long](nN)
-      i = 0
-      while (i < nE) { out(eSrc(i)) = Math.addExact(out(eSrc(i)), w(i)); i += 1 }
-      Array.tabulate(nE)(k => out(eSrc(k)))
-    }
     val rank = new Array[Long](nN)
     java.util.Arrays.fill(rank, scale)
     val c = new Array[Long](nN)
@@ -364,7 +357,7 @@ object PageRankKernel {
       while (k < nE) {
         val d = c(eDst(k))
         c(eDst(k)) = Math.addExact(d,
-          Math.multiplyExact(w(k), rank(eSrc(k)) / eDeg(k)))
+          Math.multiplyExact(w(k), rank(eSrc(k)) / deg(k)))
         k += 1
       }
       k = 0
@@ -458,8 +451,18 @@ object TextRankKernel {
       }
       i += 1
     }
+    // each edge's outdegree is its src's Σw: sum per src, then fill
+    val outW = new scala.collection.mutable.LongMap[Long]()
+    e = 0
+    while (e < nE) {
+      outW(srcId(e)) = Math.addExact(outW.getOrElse(srcId(e), 0L), w(e))
+      e += 1
+    }
+    val deg = new Array[Long](nE)
+    e = 0
+    while (e < nE) { deg(e) = outW(srcId(e)); e += 1 }
     val (dense, rank) = PageRankKernel.recurrence(
-      srcId, dstId, w, null, iterations, dampingPerMille, scale)
+      srcId, dstId, w, deg, iterations, dampingPerMille, scale)
     val base = (1000L - dampingPerMille) * scale / 1000L
     val out = new Array[Any](d)
     i = 0

@@ -302,15 +302,14 @@ object Graph {
   }
 
   /** (token, rank_fp) for every token of a checkpointed
-    * [[cooccurrenceGraph]] of `nRows` rows: up to `compactRowLimit` rows
-    * the whole graph is collected into one row for the compiled
+    * [[cooccurrenceGraph]] of `nRows` rows: up to [[CompactEdgeLimit]]
+    * rows the whole graph is collected into one row for the compiled
     * [[graft.functions.TextRankKernel]]; above it the distributed
     * [[pageRankWeighted]] loop runs (no second probe).
     */
   private[graft] def rankCooccurrence(
-      graph: DataFrame, nRows: Long, iterations: Int,
-      compactRowLimit: Long = CompactEdgeLimit): DataFrame =
-    if (nRows <= compactRowLimit)
+      graph: DataFrame, nRows: Long, iterations: Int): DataFrame =
+    if (nRows <= CompactEdgeLimit)
       graph.coalesce(1)
         .agg(collect_list(struct(col("a"), col("b"), col("w"), col("token")))
           .as("__g"))

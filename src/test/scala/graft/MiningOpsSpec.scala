@@ -193,7 +193,7 @@ class MiningOpsSpec extends AnyFunSuite {
     assert(Graph.textRank(empty, col("text")).collect().isEmpty)
   }
 
-  test("textRank: more rows than a forced limit take the loop, even with few edges") {
+  test("textRank: the gate counts dictionary rows; few edges rank alike on both paths") {
     // one two-token document and 40 one-token ones: 2 edge rows but 42
     // dictionary rows, all of which the compact path would collect
     val docs = (Seq("left right") ++ (1 to 40).map(i => s"solo$i")).toDF("text")
@@ -201,7 +201,7 @@ class MiningOpsSpec extends AnyFunSuite {
     val nEdges = graph.filter(col("b").isNotNull).count()
     assert(nEdges == 2L && nRows == 44L)
     val compact = Graph.rankCooccurrence(graph, nRows, 3)
-    val loop = Graph.rankCooccurrence(graph, nRows, 3, compactRowLimit = nEdges)
+    val loop = Graph.rankCooccurrence(graph, Graph.CompactEdgeLimit + 1, 3)
     assert(ranksCompact(compact) && !ranksCompact(loop))
     assert(ranking(loop).sorted == ranking(compact).sorted)
   }
