@@ -32,12 +32,23 @@ object Stress {
     */
   private def shuffleBytes[A](
       sc: org.apache.spark.SparkContext)(body: => A): (A, Long) = {
+    val (r, bytes, _) = shuffleWrites(sc)(body)
+    (r, bytes)
+  }
+
+  /** [[shuffleBytes]] plus the shuffle records written. */
+  private def shuffleWrites[A](
+      sc: org.apache.spark.SparkContext)(body: => A): (A, Long, Long) = {
     val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
-        if (m != null) bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
+        if (m != null) {
+          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten): Unit
+        }
       }
     }
     sc.addSparkListener(listener)
@@ -50,7 +61,7 @@ object Stress {
       while (last != bytes.get() && waited < 25) {
         last = bytes.get(); Thread.sleep(200); waited += 1
       }
-      (r, bytes.get())
+      (r, bytes.get(), records.get())
     } finally sc.removeSparkListener(listener)
   }
 
@@ -2157,10 +2168,13 @@ object Stress {
 
   /** q-digest mergeable quantile sketch at scale: n rows / 32 groups over
     * the 16-bit universe, built direct and via an 8-shard merge. The
-    * receipt: the only data-sized exchange is the leaf count (shuffle MB
-    * printed), register tables stay O(k) per group, and the median lands
-    * inside the t·bits rank envelope on uniform data (k = 1024 →
-    * ε = bits/k ≈ 1.6%).
+    * receipt: each build is one aggregation whose exchange carries at most
+    * one universe-bounded buffer per (map task, group) (records and
+    * shuffle MB printed and checked), register tables stay O(k) per group,
+    * and the median lands inside the t·bits rank envelope on uniform data
+    * (k = 1024 → ε = bits/k ≈ 1.6%). The (group, shard) build has 256
+    * groups per map task, past `ObjectHashAggregate`'s hash-map limit, so
+    * it is timed separately: it runs on the sort-based path.
     */
   private def qdigestReceipt(
       spark: org.apache.spark.sql.SparkSession, n: Long): Unit = {
@@ -2194,23 +2208,41 @@ object Stress {
       (m.getLong(0), m.getLong(1))
     }
     buildStats(): Unit
-    val (sz, bBytes) = shuffleBytes(spark.sparkContext) {
+    val (sz, bBytes, bRecords) = shuffleWrites(spark.sparkContext) {
       var r = (0L, 0L)
       time(s"qdigest_build_${n / 1000000}M", runs = 1) { r = buildStats() }
       r
     }
+    // one buffer per (map task, group); the stats' groupBy(g) reuses the
+    // registers' g partitioning, so its global max/sum adds one row per
+    // shuffle partition (32) at most
+    val mapTasks = rows.rdd.getNumPartitions.toLong
+    val bufferBound = mapTasks * 32
     println(f"[stress] qdigest build: max group size ${sz._1} registers " +
       f"(3k+1 = ${3 * k + 1}), mass ${sz._2}, " +
-      f"shuffle ${bBytes / 1048576.0}%.1f MB")
+      f"shuffle ${bBytes / 1048576.0}%.1f MB in $bRecords records " +
+      f"(buffers <= $bufferBound)")
     require(sz._1 <= 3 * k + 1 && sz._2 == n,
       s"size/mass invariant broke at scale: $sz")
+    require(bRecords <= bufferBound + 32,
+      s"build exchanged $bRecords records, more than one buffer per (task, group)")
     checkMedian(QuantileDigest.registers(
       rows, Seq(col("g")), col("v"), bits, k), "direct")
 
     // shard -> merge: the merge exchange carries ONLY register rows
-    val shardRegs = QuantileDigest.registers(
-      rows, Seq(col("g"), col("shard")), col("v"), bits, k)
-      .localCheckpoint() // isolate the merge's own shuffle in the receipt
+    var shardRegs: org.apache.spark.sql.DataFrame = null
+    val (_, sBytes, sRecords) = shuffleWrites(spark.sparkContext) {
+      time(s"qdigest_shard_build_${n / 1000000}M", runs = 1) {
+        shardRegs = QuantileDigest.registers(
+          rows, Seq(col("g"), col("shard")), col("v"), bits, k)
+          .localCheckpoint() // isolate the merge's own shuffle in the receipt
+      }
+    }
+    println(f"[stress] qdigest shard build: 256 groups, " +
+      f"shuffle ${sBytes / 1048576.0}%.1f MB in $sRecords records " +
+      f"(buffers <= ${mapTasks * 256})")
+    require(sRecords <= mapTasks * 256,
+      s"shard build exchanged $sRecords records, more than one buffer per (task, group)")
     def mergeStats(): (Long, Long) = {
       val merged = QuantileDigest.merge(shardRegs, Seq(col("g")), bits, k)
       val m = merged.agg(sum(col("cnt")), count(lit(1))).head()

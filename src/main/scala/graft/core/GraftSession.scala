@@ -69,14 +69,14 @@ object GraftSession {
   * scans so Catalyst's column pruning + predicate pushdown apply; never
   * cache here — callers decide reuse.
   *
-  * A declared catalog: every table but `events` is read with its schema
-  * stated in [[declared]], so opening it starts no Spark job (an inferred
-  * `spark.read.parquet` runs one schema-inference job per open, ~120–180
-  * ms at sf0.1). It is metadata only: no data or result is reused. A spec
-  * checks each declared schema against the inferred one in every sf dir,
-  * so drift fails loudly. `events` stays inferred because its `ts` column
-  * has shipped in two physical generations (see [[events]]): the loader
-  * must read the file's own type to pick the conversion.
+  * A declared catalog: every table is read with a stated schema, so
+  * opening it starts no Spark job (an inferred `spark.read.parquet` runs
+  * one schema-inference job per open, ~120–180 ms at sf0.1). Every table
+  * but `events` takes its schema from [[declared]]; `events` picks its
+  * `ts` type from the file's footer, read on the driver (see [[events]]).
+  * It is metadata only: no data or result is reused. A spec checks each
+  * declared schema against the inferred one in every sf dir, so drift
+  * fails loudly.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -112,28 +112,50 @@ object Tables {
       .parquet(s"$dir/$name.parquet")
 
   /** The events table's `ts` column has shipped in two generations of the
-    * driver testdata: TIMESTAMP(NANOS), which Spark only reads as raw longs
-    * (`spark.sql.legacy.parquet.nanosAsLong`), and plain microsecond
-    * timestamps (round 6+). Dispatch on the read schema so every consumer
-    * sees an ordinary `ts` TimestampType column either way.
+    * driver testdata: TIMESTAMP(NANOS), which Spark has no timestamp type
+    * for, and plain microsecond timestamps (round 6+). The generation is
+    * read from the parquet footer's logical type on the driver, and the
+    * table opens with the matching declared schema (`ts` BIGINT for nanos,
+    * then truncated to micros), so every consumer sees an ordinary `ts`
+    * TimestampType column either way, no open starts a job, and no
+    * session setting changes.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    raw.schema("ts").dataType match {
-      case LongType =>
-        // `div` = integral division: `ts / 1000` would go through double and
-        // lose sub-µs exactness above 2^53 (≈13% of epoch-nano rows are 1µs
-        // off under double division), diverging from DuckDB's nanos→micros
-        // integer truncation
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        // only reachable on a session without the factory's NTZ-inference-off
-        // config; under the UTC session the cast is value-preserving
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
+    val path = s"$dir/events.parquet"
+    if (tsIsNanos(spark, path)) {
+      // a declared BIGINT reads the raw nanos with no session toggle;
+      // `div` = integral division: `ts / 1000` would go through double and
+      // lose sub-µs exactness above 2^53 (≈13% of epoch-nano rows are 1µs
+      // off under double division), diverging from DuckDB's nanos→micros
+      // integer truncation
+      spark.read.schema(eventsSchema("BIGINT")).parquet(path)
+        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    } else spark.read.schema(eventsSchema("TIMESTAMP")).parquet(path)
+  }
+
+  private def eventsSchema(tsType: String): StructType = StructType.fromDDL(
+    s"event_id BIGINT, ts $tsType, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING")
+
+  /** Whether `ts` is TIMESTAMP(NANOS) in the footer of the parquet file
+    * at `path`.
+    */
+  private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConf()
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+    val ts = try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation
+    } finally reader.close()
+    ts match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+      case _ => false
     }
   }
 }

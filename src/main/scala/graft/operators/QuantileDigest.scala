@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.QDigestCompress
+import graft.functions.QDigestAgg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,14 +15,16 @@ import org.apache.spark.sql.functions._
   * and why q-digest over KLL (randomized — not oracle-replayable) or GK
   * (one-way mergeable only). Properties that matter at 100 TB:
   *
-  *  - '''One data-sized pass.''' The only input-sized exchange is the
-  *    (group, value) leaf count — map-side combined, output bounded by
-  *    group-count × 2^bits regardless of row count. Everything after
-  *    operates on that bounded frame.
-  *  - '''Bounded per-group state.''' The compression kernel sees at most
-  *    2^bits leaf entries per group (the UNIVERSE bound, not a data
-  *    bound) — 65k structs ≈ 1.5 MB at bits = 16; same
-  *    dimension-bounded-collect class as the IVF codebooks.
+  *  - '''One aggregation, one exchange.''' Build and merge are both one
+  *    [[graft.functions.QDigestAgg]] aggregation: each map task sums its
+  *    rows into one packed-key buffer per group, so the one exchange
+  *    carries at most one buffer per (map task, group), bounded by
+  *    group-count × 2^bits regardless of row count. The final aggregate
+  *    compresses each group once and the registers are exploded.
+  *  - '''Bounded per-group state.''' A buffer holds at most 2^bits leaves
+  *    per group (the UNIVERSE bound, not a data bound) — 65k entries ≈
+  *    2 MB of primitive arrays at bits = 16; same dimension-bounded class
+  *    as the IVF codebooks.
   *  - '''Fully mergeable.''' merge = per-(lvl, cell) count sum + one
   *    recompression at the combined threshold; shard-built digests
   *    merge without touching raw data, and the merged digest obeys the
@@ -38,13 +40,9 @@ import org.apache.spark.sql.functions._
   */
 object QuantileDigest {
 
-  private def nodeStruct(lvl: Column, cell: Column, cnt: Column): Column =
-    struct(lvl.cast("int").as("lvl"), cell.cast("long").as("cell"),
-      cnt.cast("long").as("cnt"))
-
   /** Build per-group q-digest registers from an integer value column.
     * Values must lie in [0, 2^bits) — out-of-range fails loud in the
-    * kernel (never clamped).
+    * aggregate (never clamped).
     *
     * @return (g…, lvl, cell, cnt), sorted-within-group by construction.
     */
@@ -56,10 +54,7 @@ object QuantileDigest {
     val leaves = df
       .select(groupCols :+ valueCol.cast("long").as("__v"): _*)
       .filter(col("__v").isNotNull)
-      .groupBy(names.map(col) :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"))
-    compressed(leaves, names,
-      nodeStruct(lit(0), col("__v"), col("__c")), bits, k)
+    digests(leaves, names, lit(0), col("__v"), lit(1L), bits, k)
   }
 
   /** Merge register tables down to coarser groups (or one global digest):
@@ -79,11 +74,7 @@ object QuantileDigest {
       bits: Int, k: Int): DataFrame = {
     val names = registers.select(groupCols: _*).columns.toSeq
     requireNoClash(names, "merge")
-    val summed = registers
-      .groupBy(names.map(col) ++ Seq(col("lvl"), col("cell")): _*)
-      .agg(sum(col("cnt")).as("__c"))
-    compressed(summed, names,
-      nodeStruct(col("lvl"), col("cell"), col("__c")), bits, k)
+    digests(registers, names, col("lvl"), col("cell"), col("cnt"), bits, k)
   }
 
   /** Quantile estimates from registers: for each q in `qs`, the smallest
@@ -129,18 +120,17 @@ object QuantileDigest {
       .agg(min(col("__upper")).as("est"), first(col("__n")).as("n_rows"))
   }
 
-  /** groupBy(g, node-struct-source) → collect per group → kernel →
-    * explode. The collect is universe-bounded (≤ 2^bits entries), never
-    * data-bounded — the dimension-bounded-collect contract.
+  /** groupBy(g) → [[QDigestAgg]] over the node rows → explode: the
+    * partial aggregate combines map-side, one exchange, the final
+    * aggregate compresses each group once.
     */
-  private def compressed(
-      nodes: DataFrame, names: Seq[String], nodeCol: Column,
-      bits: Int, k: Int): DataFrame =
+  private def digests(
+      nodes: DataFrame, names: Seq[String], lvl: Column, cell: Column,
+      cnt: Column, bits: Int, k: Int): DataFrame =
     nodes
       .groupBy(names.map(col): _*)
-      .agg(collect_list(nodeCol).as("__nodes"))
-      .select(names.map(col) :+
-        explode(QDigestCompress.expr(col("__nodes"), bits, k)).as("__d"): _*)
+      .agg(QDigestAgg.agg(lvl, cell, cnt, bits, k).as("__nodes"))
+      .select(names.map(col) :+ explode(col("__nodes")).as("__d"): _*)
       .select(names.map(col) ++ Seq(col("__d.lvl").as("lvl"),
         col("__d.cell").as("cell"), col("__d.cnt").as("cnt")): _*)
 

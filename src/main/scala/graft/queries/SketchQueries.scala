@@ -32,7 +32,8 @@ object SketchQueries {
     * q252 can chain two phases): sibling-group the pending level-`l`
     * nodes by parent cell; group mass + parent's pending mass < t →
     * absorb into the parent (stays pending), else the group finalizes.
-    * Exactly [[graft.functions.QDigestCompress.compress]]'s loop body.
+    * Exactly [[graft.functions.QDigestCompress.compressSorted]]'s level
+    * step.
     */
   private def qdStepSql(p: String, l: Int): String = {
     val s0 = s"${p}s$l"; val s1 = s"${p}s${l + 1}"
@@ -81,9 +82,9 @@ object SketchQueries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // q-digest registers per order priority — the build path: one
-    // (group, value) count (the only data-sized exchange), a
-    // universe-bounded per-group collect, the compiled compression
-    // kernel, explode. Registers are on the oracle surface.
+    // map-side-combining aggregate (one exchange of universe-bounded
+    // per-group buffers), the compiled compression kernel per group,
+    // explode. Registers are on the oracle surface.
     "q251_qdigest_registers" -> ((s, dir) => {
       val o = Tables.load(s, dir, "orders")
         .filter(col("o_totalprice").isNotNull)

@@ -103,4 +103,20 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(exchanges.isEmpty,
       "q122 must not shuffle — within-doc dedup is a pure projection")
   }
+
+  test("q251 builds its registers through one data-path exchange, no collect_list") {
+    // scan + partial q-digest aggregate -> one hash exchange -> final
+    // aggregate + explode; the leaf-count-then-collect form has two
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    val df = SparkEntry.queries("q251_qdigest_registers")(spark, SparkTestSession.Sf0001)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning != SinglePartition => e
+    }
+    assert(exchanges.size == 1, s"q251 has ${exchanges.size} data-path exchanges:\n$plan")
+    assert(!plan.toString.contains("collect_list"), s"q251 still collects:\n$plan")
+  }
 }

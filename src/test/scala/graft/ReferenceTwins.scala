@@ -83,4 +83,60 @@ object ReferenceTwins {
       .join(scores, Seq("id"), "left")
       .select(col("token"), coalesce(col("rank_fp"), lit(base)).as("rank_fp"))
   }
+
+  /** [[graft.functions.QDigestCompress.compressSorted]] as the map walk it
+    * replaced: pending nodes in a `(lvl, cell)`-keyed HashMap, each level's
+    * cells filtered out of it and sorted, sibling groups absorbed into
+    * their parent while group + parent mass stays under `t`. Same checks,
+    * output sorted by (lvl, cell).
+    */
+  def qdigestCompressMap(
+      nodes: Array[(Int, Long, Long)], bits: Int, k: Int)
+      : Array[(Int, Long, Long)] = {
+    val pend = scala.collection.mutable.HashMap.empty[(Int, Long), Long]
+    var n = 0L
+    nodes.foreach { case (lvl, cell, cnt) =>
+      require(lvl >= 0 && lvl <= bits, s"level $lvl outside [0, $bits]")
+      require(cnt >= 0, s"negative count $cnt at ($lvl, $cell)")
+      require(cell >= 0 && cell < (1L << (bits - lvl)),
+        s"cell $cell outside the $bits-bit universe at level $lvl")
+      if (cnt > 0) {
+        val key = (lvl, cell)
+        pend(key) = pend.getOrElse(key, 0L) + cnt
+        n += cnt
+      }
+    }
+    val t = math.max(1L, n / k)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
+    var lvl = 0
+    while (lvl < bits) {
+      val cur = pend.keysIterator.filter(_._1 == lvl).map(_._2).toArray
+      java.util.Arrays.sort(cur)
+      var i = 0
+      while (i < cur.length) {
+        val p = cur(i) >> 1
+        var j = i
+        var s = 0L
+        while (j < cur.length && (cur(j) >> 1) == p) {
+          s += pend((lvl, cur(j))); j += 1
+        }
+        val pk = (lvl + 1, p)
+        val withParent = s + pend.getOrElse(pk, 0L)
+        if (withParent < t) {
+          (i until j).foreach(x => pend.remove((lvl, cur(x))))
+          pend(pk) = withParent
+        } else {
+          (i until j).foreach { x =>
+            out += ((lvl, cur(x), pend((lvl, cur(x)))))
+            pend.remove((lvl, cur(x)))
+          }
+        }
+        i = j
+      }
+      lvl += 1
+    }
+    // only the root (level = bits, cell 0) can still be pending
+    pend.foreach { case ((l, c), cnt) => out += ((l, c, cnt)) }
+    out.sortBy(x => (x._1, x._2)).toArray
+  }
 }

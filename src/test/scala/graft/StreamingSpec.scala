@@ -827,10 +827,9 @@ class StreamingSpec extends AnyFunSuite {
     val items = (1L to 4000L).map(i => ("g" + (i % 2), (i * 37) % 1024))
     val stream = MemoryStream[(String, Long)]
     // the digest is a deterministic function of the (g, value) leaf
-    // counts; the build's second aggregation (universe-bounded collect +
-    // kernel) can't chain onto a streaming agg, so the streaming law is:
-    // leaf counts maintained by the stream (complete mode), compressed
-    // via merge() on lvl-0 nodes — register-identical to the batch build
+    // counts: leaf counts maintained by the stream (complete mode),
+    // compressed via merge() on lvl-0 nodes, are register-identical to
+    // the batch build
     val q = stream.toDF.toDF("g", "v").groupBy("g", "v").count()
       .writeStream.outputMode("complete").format("memory")
       .queryName("qd_stream_test").start()
@@ -843,6 +842,32 @@ class StreamingSpec extends AnyFunSuite {
           col("count").as("cnt"))
       val streamed = graft.operators.QuantileDigest
         .merge(leafTab, Seq(col("g")), bits = 10, k = 32)
+        .as[(String, Int, Long, Long)].collect().toSet
+      val batch = graft.operators.QuantileDigest
+        .registers(items.toDF("g", "v"), Seq(col("g")), col("v"),
+          bits = 10, k = 32)
+        .as[(String, Int, Long, Long)].collect().toSet
+      assert(streamed == batch && batch.nonEmpty)
+    } finally q.stop()
+  }
+
+  test("qdigest: registers stream (complete mode) == batch registers") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val items = (1L to 4000L).map(i => ("g" + (i % 2), (i * 37) % 1024))
+    val stream = MemoryStream[(String, Long)]
+    // the build is one aggregation (the q-digest buffer is its state), so
+    // the registers themselves run as the streaming query
+    val q = graft.operators.QuantileDigest
+      .registers(stream.toDF.toDF("g", "v"), Seq(col("g")), col("v"),
+        bits = 10, k = 32)
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("qd_registers_stream_test").start()
+    try {
+      val (a, b) = items.splitAt(1500)
+      stream.addData(a); q.processAllAvailable()
+      stream.addData(b); q.processAllAvailable()
+      val streamed = spark.sql("SELECT g, lvl, cell, cnt FROM qd_registers_stream_test")
         .as[(String, Int, Long, Long)].collect().toSet
       val batch = graft.operators.QuantileDigest
         .registers(items.toDF("g", "v"), Seq(col("g")), col("v"),
