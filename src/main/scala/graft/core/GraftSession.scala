@@ -112,8 +112,8 @@ object Tables {
       .parquet(s"$dir/$name.parquet")
 
   /** The events table's `ts` column has shipped in two generations of the
-    * driver testdata: TIMESTAMP(NANOS), which Spark has no timestamp type
-    * for, and plain microsecond timestamps (round 6+). The generation is
+    * synthetic testdata: TIMESTAMP(NANOS), which Spark has no timestamp
+    * type for, and plain microsecond timestamps (round 6+). The generation is
     * read from the parquet footer's logical type on the driver, and the
     * table opens with the matching declared schema (`ts` BIGINT for nanos,
     * then truncated to micros), so every consumer sees an ordinary `ts`
