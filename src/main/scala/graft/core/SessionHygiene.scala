@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
+import scala.jdk.CollectionConverters._
+
 /** Long-session debris control.
   *
   * A Spark session that runs hundreds of queries in one JVM accumulates
@@ -33,13 +35,10 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionHygiene {
 
-  /** ContextCleaner reference-buffer depth via reflection (the field is
-    * private[spark]); -1 if the internals ever change shape. The buffer
-    * holds one entry per registered-but-not-yet-cleaned shuffle /
-    * broadcast / RDD / accumulator — a depth that climbs across a suite
-    * is exactly "artifacts awaiting a GC to be released".
+  /** ContextCleaner's reference buffer (the field is private[spark]), or
+    * None if the internals ever change shape.
     */
-  def cleanerQueueDepth(spark: SparkSession): Long =
+  private def referenceBuffer(spark: SparkSession): Option[AnyRef] =
     try {
       val sc = spark.sparkContext
       val cleaner = classOf[org.apache.spark.SparkContext]
@@ -48,15 +47,47 @@ object SessionHygiene {
         val f = c.getClass.getDeclaredFields
           .find(_.getName.contains("referenceBuffer")).get
         f.setAccessible(true)
-        f.get(c) match {
-          case s: java.util.Set[_]    => s.size.toLong
-          case m: java.util.Map[_, _] => m.size.toLong
-          case other =>
-            other.getClass.getMethod("size").invoke(other)
-              .asInstanceOf[Number].longValue()
-        }
+        f.get(c)
+      }
+    } catch { case _: Throwable => None }
+
+  /** ContextCleaner reference-buffer depth via reflection; -1 if the
+    * internals ever change shape. The buffer holds one entry per
+    * registered-but-not-yet-cleaned shuffle / broadcast / RDD /
+    * accumulator — a depth that climbs across a suite is exactly
+    * "artifacts awaiting a GC to be released".
+    */
+  def cleanerQueueDepth(spark: SparkSession): Long =
+    try {
+      referenceBuffer(spark).map {
+        case s: java.util.Set[_]    => s.size.toLong
+        case m: java.util.Map[_, _] => m.size.toLong
+        case other =>
+          other.getClass.getMethod("size").invoke(other)
+            .asInstanceOf[Number].longValue()
       }.getOrElse(-1L)
     } catch { case _: Throwable => -1L }
+
+  /** The reference buffer counted by cleanup-task kind: `shuffle`,
+    * `broadcast`, `rdd`, `accumulator`, `checkpoint` (and `sparklistener`);
+    * empty if the internals are unreadable. A diagnostic for what a
+    * workload leaves behind — [[drain]] does not call it, since it walks
+    * the whole buffer.
+    */
+  def cleanerQueueKinds(spark: SparkSession): Map[String, Long] =
+    try {
+      referenceBuffer(spark) match {
+        case Some(refs: java.util.Collection[_]) =>
+          refs.asScala.toSeq.groupMapReduce { ref =>
+            val task = ref.getClass.getMethod("task").invoke(ref.asInstanceOf[AnyRef])
+            task.getClass.getSimpleName.stripPrefix("Clean") match {
+              case "Accum" => "accumulator"
+              case other => other.toLowerCase
+            }
+          }(_ => 1L)(_ + _)
+        case _ => Map.empty
+      }
+    } catch { case _: Throwable => Map.empty }
 
   /** Calls made while the queue probe is unreadable (-1) — drives the
     * degraded every-8th-call GC cadence. */

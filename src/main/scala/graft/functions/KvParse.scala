@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types.{DataType, MapType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One `键：值` KV block parsed into a map as ONE compiled byte scan — the
@@ -113,7 +114,7 @@ object KvParse {
         colon = -1
       } else if (b < 0) {
         // a UTF-8 lead byte: validate its sequence and step over it
-        val len = sequenceLength(bytes, i, n)
+        val len = sequenceLength(bytes, Platform.BYTE_ARRAY_OFFSET, i, n)
         if (len == 0) return parse(UTF8String.fromString(block.toString))
         if (colon < 0 && b == 0xEF.toByte && bytes(i + 1) == 0xBC.toByte &&
             bytes(i + 2) == 0x9A.toByte) {
@@ -135,13 +136,16 @@ object KvParse {
   }
 
   /** Length of the well-formed UTF-8 sequence (Unicode Table 3-7) that
-    * starts with the non-ASCII byte at `i`, or 0 if it is malformed — the
-    * bytes Java's decoder would replace with U+FFFD.
+    * starts with the non-ASCII byte at `i` of the `n` bytes at
+    * (`base`, `off`), or 0 if it is malformed — the bytes Java's decoder
+    * would replace with U+FFFD. Shared with [[KvRender]].
     */
-  private def sequenceLength(bytes: Array[Byte], i: Int, n: Int): Int = {
-    def inRange(k: Int, lo: Int, hi: Int): Boolean =
-      i + k < n && (bytes(i + k) & 0xff) >= lo && (bytes(i + k) & 0xff) <= hi
-    val b = bytes(i) & 0xff
+  private[functions] def sequenceLength(base: AnyRef, off: Long, i: Int, n: Int): Int = {
+    def inRange(k: Int, lo: Int, hi: Int): Boolean = i + k < n && {
+      val c = Platform.getByte(base, off + i + k) & 0xff
+      c >= lo && c <= hi
+    }
+    val b = Platform.getByte(base, off + i) & 0xff
     if (b >= 0xc2 && b <= 0xdf) { if (inRange(1, 0x80, 0xbf)) 2 else 0 }
     else if (b >= 0xe0 && b <= 0xef) {
       val lo = if (b == 0xe0) 0xa0 else 0x80   // no overlong form

@@ -148,47 +148,7 @@ object PolyHash {
   def polySimHash(c: Column): Column =
     GraftColumnBridge.column(PolySimHash(GraftColumnBridge.expression(c)))
 
-  // ---- composable SPEC forms (interpreted HOFs; bit-equality asserted
-  //      against the compiled expressions in DedupSimilaritySpec) ----------
-
   import org.apache.spark.sql.functions._
-
-  /** Distinct shingle poly-hashes via the readable HOF pipeline: shingle
-    * strings → per-string char fold → value-dedup (first-occurrence order,
-    * same as the compiled path's hash-keyed dedup).
-    */
-  def polyShingleHashesComposable(c: Column, k: Int): Column =
-    array_distinct(transform(TextFunctions.distinctShingles(c, k),
-      s => TextFunctions.tokenHash(s)))
-
-  /** Ordered gram poly-hashes (dups kept, index = token position) via the
-    * readable HOF pipeline — spec twin of the compiled PolyGramHashes.
-    */
-  def polyGramHashesComposable(c: Column, k: Int): Column =
-    transform(TextFunctions.shingles(c, k), s => TextFunctions.tokenHash(s))
-
-  /** Secondary char fold as a Column (mult 37 mod 998244353). */
-  def tokenHash2(w: Column): Column =
-    aggregate(
-      filter(split(w, ""), ch => ch =!= ""),
-      lit(0L),
-      (acc, ch) => pmod(acc * M2 + ascii(ch), lit(P2)))
-
-  /** Composable 60-bit SimHash: bits 0..29 from the primary token fold,
-    * bits 30..59 from the secondary — sign of the per-bit ±1 vote.
-    */
-  def polySimHashComposable(c: Column): Column = {
-    val toks = TextFunctions.tokens(c)
-    val h1s = transform(toks, w => TextFunctions.tokenHash(w))
-    val h2s = transform(toks, w => tokenHash2(w))
-    val bits = (0 until 60).map { j =>
-      val (hs, b) = if (j < 30) (h1s, j) else (h2s, j - 30)
-      val vote = aggregate(hs, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, b).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      when(vote > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ bitwiseOR _)
-  }
 
   /** Band-bucket combine over a signature slice: `fold (acc·31 + slot) mod
     * 1e9+7` — tiny per-row fold, reproduced verbatim by the oracle.

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Compiled 64-bit SimHash: tokenize (ASCII-\s, same as TextFunctions
   * .tokens), hash each token with Spark's own xxhash64 (seed 42 — the
   * `functions.xxhash64` column form), and take the sign of the per-bit
-  * ±1 vote. Bit-identical to the composable `Dedup.simHashComposable`
+  * ±1 vote. Bit-identical to the composable `ReferenceTwins.simHashComposable`
   * spec form (equality asserted in DedupSimilaritySpec), which runs 64
   * interpreted `aggregate` traversals of the token-hash array per row;
   * this is one pass over the tokens with a 64-counter accumulator.

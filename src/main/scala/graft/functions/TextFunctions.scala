@@ -193,20 +193,6 @@ object TextFunctions {
 
   def langIdHeuristic(c: Column): Column = LangIdVote.expr(c)
 
-  /** The composable (pure-built-in) form of the vote — kept as the
-    * readable specification of LangIdVote's semantics and exercised by
-    * TextFunctionsSpec's equivalence test. Five interpreted HOF passes,
-    * so the compiled form is what queries use.
-    */
-  def langIdHeuristicComposable(c: Column): Column = {
-    val t = tokens(lower(c))
-    val scored = LangMarkers.toSeq.sortBy(_._1).map { case (lang, ws) =>
-      struct(size(filter(t, w => w.isin(ws: _*))).as("hits"), lit(lang).as("lang"))
-    }
-    val best = array_max(array(scored: _*))
-    when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
-  }
-
   // ---- fingerprinting -----------------------------------------------------
 
   /** Modulus for the rolling hashes: keeps every intermediate < 2^35, so

@@ -208,23 +208,11 @@ object Dedup {
 
   /** 64-bit SimHash over token hashes: bit j of the signature is the sign of
     * Σ_tokens (±1 depending on bit j of the token hash). One compiled pass
-    * (graft.functions.SimHash64); semantics = `simHashComposable`.
+    * (graft.functions.SimHash64); semantics = `ReferenceTwins.simHashComposable`
+    * (src/test).
     */
   def simHash(textCol: Column): Column =
     graft.functions.SimHash64.expr(textCol)
-
-  /** Composable SPEC form of simHash — 64 interpreted `aggregate` passes;
-    * kept as the readable definition and exercised by the equivalence spec.
-    */
-  def simHashComposable(textCol: Column): Column = {
-    val tokHashes = transform(tokens(textCol), w => xxhash64(w))
-    val bits = (0 until 64).map { j =>
-      val bitSum = aggregate(tokHashes, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, j).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ bitwiseOR _)
-  }
 
   /** Near-dup pairs over any 64-bit signature column (SimHash, image
     * dHash) by banded hamming blocking: the signature splits into `bands`
@@ -911,33 +899,6 @@ object Dedup {
             org.apache.spark.sql.classic.GraftColumnBridge.expression(grams),
             w))).as("__fp"))
       .select(col("id"), col("__fp.pos").as("pos"), col("__fp.h").as("h"))
-  }
-
-  /** The composable SPEC form of [[winnowedFingerprints]] — kept as the
-    * readable definition; the equivalence spec asserts the kernel
-    * matches it row-for-row.
-    */
-  def winnowedFingerprintsComposable(df: DataFrame, idCol: Column,
-      textCol: Column, k: Int = 5, w: Int = 8): DataFrame = {
-    require(k >= 1 && k <= 16, s"k must be in 1..16, got $k")
-    require(w >= 2 && w <= 64, s"w must be in 2..64, got $w")
-    val grams = graft.functions.PolyHash.polyGramHashes61(textCol, k)
-    df.select(idCol.as("id"), grams.as("__g"))
-      .withColumn("__nw",
-        when(size(col("__g")) >= w, size(col("__g")) - (w - 1))
-          .when(size(col("__g")) >= 1, lit(1)).otherwise(lit(0)))
-      .filter(col("__nw") > 0)
-      .select(col("id"), col("__g"),
-        explode(sequence(lit(1), col("__nw"))).as("__i"))
-      .withColumn("__win", expr(s"slice(__g, __i, $w)"))
-      .withColumn("__m", expr("array_min(__win)"))
-      // rightmost minimal hash (the paper's robust-winnowing tiebreak):
-      // leftmost position in the reversed window
-      .withColumn("__pos", expr(
-        "__i + size(__win) - array_position(reverse(__win), __m)"))
-      .select(col("id"), col("__pos").cast("long").as("pos"),
-        col("__m").as("h"))
-      .distinct()
   }
 
   /** Near-duplicate candidate pairs from shared winnowed fingerprints —

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.functions.KvParse
+import graft.functions.{KvParse, KvRender}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,17 +66,19 @@ object KvBlock {
     */
   def field(kv: Column, key: String): Column = element_at(kv, key)
 
-  /** Render rows back to KV blocks: one line per (key, value), in the given
-    * key order — the inverse of parseBlock, used by the partitioned sink.
-    * Values are sanitized (newlines and the `^_^` record delimiter collapse
-    * to a space) so a hostile value can't split its record, inject extra
-    * KV lines, or terminate the block early — the round trip
+  /** Render rows back to KV blocks: one `k：v` line per (key, value), in
+    * the given key order, joined by `\n` — the inverse of parseBlock, used
+    * by the partitioned sink. Keys are written verbatim. Values are cast to
+    * string and sanitized: `\r\n`, a lone `\n`, a lone `\r` and the `^_^`
+    * record delimiter each become one space, leftmost-first without
+    * overlap, so a hostile value can't split its record, inject extra KV
+    * lines, or terminate the block early — the round trip
     * parseBlock(renderBlock(kv)) is total, not just for well-formed input.
+    * A null value drops its line; an empty one keeps `k：`; all-null
+    * renders the empty string, never null. One compiled byte pass per row:
+    * see [[graft.functions.KvRender]].
     */
-  def renderBlock(kvPairs: Seq[(String, Column)]): Column =
-    concat_ws("\n", kvPairs.map { case (k, v) =>
-      concat(lit(k), lit("："), regexp_replace(v, "\\r?\\n|\\r|\\^_\\^", " "))
-    }: _*)
+  def renderBlock(kvPairs: Seq[(String, Column)]): Column = KvRender.expr(kvPairs)
 
   /** S14 sink: blocks written under one directory per partition value,
     * each record terminated by the `^_^` delimiter so any concatenation of

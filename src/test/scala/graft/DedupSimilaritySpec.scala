@@ -73,7 +73,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .unionByName(Seq("", "   ", "one").toDF("text"))
     val diff = docs.select(
         Dedup.simHash(col("text")).as("compiled"),
-        Dedup.simHashComposable(col("text")).as("composable"))
+        ReferenceTwins.simHashComposable(col("text")).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
     assert(diff == 0)
@@ -85,7 +85,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .unionByName(Seq("", "   ", "one two", "a b c a b c a b c").toDF("text"))
     val diff = docs.select(
         graft.functions.PolyHash.polyShingleHashes(col("text"), 3).as("compiled"),
-        graft.functions.PolyHash.polyShingleHashesComposable(col("text"), 3).as("composable"))
+        ReferenceTwins.polyShingleHashesComposable(col("text"), 3).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
     assert(diff == 0)
@@ -113,7 +113,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .unionByName(Seq("", "   ", "one").toDF("text"))
     val diff = docs.select(
         graft.functions.PolyHash.polySimHash(col("text")).as("compiled"),
-        graft.functions.PolyHash.polySimHashComposable(col("text")).as("composable"))
+        ReferenceTwins.polySimHashComposable(col("text")).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
     assert(diff == 0)
@@ -359,7 +359,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .unionByName(Seq("", "   ", "one two", "a b c a b c a b c").toDF("text"))
     val diff = docs.select(
         graft.functions.PolyHash.polyGramHashes(col("text"), 4).as("compiled"),
-        graft.functions.PolyHash.polyGramHashesComposable(col("text"), 4).as("composable"))
+        ReferenceTwins.polyGramHashesComposable(col("text"), 4).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
     assert(diff == 0)
@@ -708,7 +708,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       val kern = Dedup.winnowedFingerprints(df, col("id"), col("text"), k, w)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet
-      val comp = Dedup.winnowedFingerprintsComposable(
+      val comp = ReferenceTwins.winnowedFingerprintsComposable(
           df, col("id"), col("text"), k, w)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet

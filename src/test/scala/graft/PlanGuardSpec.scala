@@ -119,4 +119,62 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(exchanges.size == 1, s"q251 has ${exchanges.size} data-path exchanges:\n$plan")
     assert(!plan.toString.contains("collect_list"), s"q251 still collects:\n$plan")
   }
+
+  /** The executed plans of the queries (writes included) that `body`
+    * completes, as an execution listener reports them.
+    */
+  private def plansDuring(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      SparkTestSession.settle(plans.size)
+      plans.toArray(Array.empty[SparkPlan]).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("KV blocks render through the compiled kernel: no regex, no concat_ws, no fallback") {
+    import org.apache.spark.sql.catalyst.expressions.{ConcatWs, RegExpReplace}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    graft.core.CodegenFallbacks.install()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val out = java.nio.file.Files.createTempDirectory("plan_guard_corpus")
+    // the render projection: the write of the corpus pipeline and of q83
+    // (q83's read-back trims blocks with a regex, in a later query), and
+    // q28's one query
+    val renders = Seq[(String, () => Unit, SparkPlan => Boolean)](
+      ("corpusPipeline write", () => Bench.corpusPipeline(spark, out.toString): Unit,
+        p => helper.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty),
+      ("q28", () => SparkEntry.queries("q28_kv_roundtrip")(spark, SparkTestSession.Sf0001)
+        .collect(): Unit, _ => true),
+      ("q83 write", () => SparkEntry.queries("q83_kv_sink_layout")(
+        spark, SparkTestSession.Sf0001).collect(): Unit,
+        p => helper.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty))
+    try {
+      renders.foreach { case (name, run, isRender) =>
+        val (plans, fallbacks) =
+          graft.core.CodegenFallbacks.during(plansDuring(run()).filter(isRender))
+        assert(fallbacks == 0, s"$name: $fallbacks codegen fallbacks")
+        assert(plans.nonEmpty, s"$name: no render plan captured")
+        plans.foreach { plan =>
+          val exprs = helper.flatMap(plan)(_.expressions.flatMap(_.collect { case e => e }))
+          val offenders = exprs.collect {
+            case e: RegExpReplace => e.prettyName
+            case e: ConcatWs => e.prettyName
+          }
+          assert(offenders.isEmpty, s"$name renders with ${offenders.distinct}:\n$plan")
+          assert(exprs.exists(_.isInstanceOf[graft.functions.KvRender]),
+            s"$name has no kv_render:\n$plan")
+        }
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{PageRankKernel, TextFunctions}
+import graft.functions.{PageRankKernel, PolyHash, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,6 +29,107 @@ object ReferenceTwins {
       l => struct(
         trim(regexp_extract(l, "^([^：:]*)[：:]", 1)).as("key"),
         trim(regexp_replace(l, "^[^：:]*[：:]", "")).as("value"))))
+
+  /** [[graft.sources.KvBlock.renderBlock]] as built-in expressions: one
+    * `k：v` line per pair joined by `\n`, each value's `\r\n`, `\n`, `\r`
+    * and `^_^` replaced by a space; a null value drops its line.
+    * [[graft.functions.KvRender]] must match it byte for byte.
+    */
+  def kvRenderComposable(kvPairs: Seq[(String, Column)]): Column =
+    concat_ws("\n", kvPairs.map { case (k, v) =>
+      concat(lit(k), lit("："), regexp_replace(v, "\\r?\\n|\\r|\\^_\\^", " "))
+    }: _*)
+
+  /** Distinct shingle poly-hashes via the readable HOF pipeline: shingle
+    * strings → per-string char fold → value-dedup (first-occurrence order,
+    * same as [[graft.functions.PolyShingleHashes]]' hash-keyed dedup).
+    */
+  def polyShingleHashesComposable(c: Column, k: Int): Column =
+    array_distinct(transform(TextFunctions.distinctShingles(c, k),
+      s => TextFunctions.tokenHash(s)))
+
+  /** Ordered gram poly-hashes (dups kept, index = token position) via the
+    * readable HOF pipeline — twin of [[graft.functions.PolyGramHashes]].
+    */
+  def polyGramHashesComposable(c: Column, k: Int): Column =
+    transform(TextFunctions.shingles(c, k), s => TextFunctions.tokenHash(s))
+
+  /** Secondary char fold as a Column (mult 37 mod 998244353). */
+  private def tokenHash2(w: Column): Column =
+    aggregate(
+      filter(split(w, ""), ch => ch =!= ""),
+      lit(0L),
+      (acc, ch) => pmod(acc * PolyHash.M2 + ascii(ch), lit(PolyHash.P2)))
+
+  /** Composable 60-bit SimHash ([[graft.functions.PolySimHash]]): bits
+    * 0..29 from the primary token fold, bits 30..59 from the secondary —
+    * sign of the per-bit ±1 vote.
+    */
+  def polySimHashComposable(c: Column): Column = {
+    val toks = TextFunctions.tokens(c)
+    val h1s = transform(toks, w => TextFunctions.tokenHash(w))
+    val h2s = transform(toks, w => tokenHash2(w))
+    val bits = (0 until 60).map { j =>
+      val (hs, b) = if (j < 30) (h1s, j) else (h2s, j - 30)
+      val vote = aggregate(hs, lit(0L), (acc, h) =>
+        acc + when(shiftright(h, b).bitwiseAND(1) === 1, 1L).otherwise(-1L))
+      when(vote > 0, lit(1L << j)).otherwise(lit(0L))
+    }
+    bits.reduce(_ bitwiseOR _)
+  }
+
+  /** [[graft.operators.Dedup.simHash]] as 64 interpreted `aggregate`
+    * passes over the tokens' xxhash64 values.
+    */
+  def simHashComposable(textCol: Column): Column = {
+    val tokHashes = transform(TextFunctions.tokens(textCol), w => xxhash64(w))
+    val bits = (0 until 64).map { j =>
+      val bitSum = aggregate(tokHashes, lit(0L), (acc, h) =>
+        acc + when(shiftright(h, j).bitwiseAND(1) === 1, 1L).otherwise(-1L))
+      when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
+    }
+    bits.reduce(_ bitwiseOR _)
+  }
+
+  /** [[graft.operators.Dedup.winnowedFingerprints]] with one exploded row
+    * per window: the rightmost minimal gram hash of each window of `w`,
+    * distinct per (id, pos).
+    */
+  def winnowedFingerprintsComposable(df: DataFrame, idCol: Column,
+      textCol: Column, k: Int = 5, w: Int = 8): DataFrame = {
+    require(k >= 1 && k <= 16, s"k must be in 1..16, got $k")
+    require(w >= 2 && w <= 64, s"w must be in 2..64, got $w")
+    val grams = PolyHash.polyGramHashes61(textCol, k)
+    df.select(idCol.as("id"), grams.as("__g"))
+      .withColumn("__nw",
+        when(size(col("__g")) >= w, size(col("__g")) - (w - 1))
+          .when(size(col("__g")) >= 1, lit(1)).otherwise(lit(0)))
+      .filter(col("__nw") > 0)
+      .select(col("id"), col("__g"),
+        explode(sequence(lit(1), col("__nw"))).as("__i"))
+      .withColumn("__win", expr(s"slice(__g, __i, $w)"))
+      .withColumn("__m", expr("array_min(__win)"))
+      // rightmost minimal hash (the paper's robust-winnowing tiebreak):
+      // leftmost position in the reversed window
+      .withColumn("__pos", expr(
+        "__i + size(__win) - array_position(reverse(__win), __m)"))
+      .select(col("id"), col("__pos").cast("long").as("pos"),
+        col("__m").as("h"))
+      .distinct()
+  }
+
+  /** [[graft.functions.LangIdVote]] as built-in expressions: per language,
+    * the count of lowercased tokens in its marker list; the best (hits,
+    * lang) struct wins, "und" when nothing hits.
+    */
+  def langIdHeuristicComposable(c: Column): Column = {
+    val t = TextFunctions.tokens(lower(c))
+    val scored = TextFunctions.LangMarkers.toSeq.sortBy(_._1).map { case (lang, ws) =>
+      struct(size(filter(t, w => w.isin(ws: _*))).as("hits"), lit(lang).as("lang"))
+    }
+    val best = array_max(array(scored: _*))
+    when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
+  }
 
   /** TextRank's co-occurrence edges as higher-order functions over each
     * document's token-hash array: element i pairs with element i+d for

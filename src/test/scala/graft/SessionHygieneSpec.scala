@@ -63,4 +63,21 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(stats.queueAfter <= math.max(64L, before),
       s"queue did not settle: before=$before after=${stats.queueAfter}")
   }
+
+  test("cleanerQueueKinds counts the buffer by cleanup kind") {
+    // a broadcast join and a shuffle whose handles stay reachable through
+    // the executed plan until the counts are read
+    val a = (1 to 2000).map(j => (j % 97, j)).toDF("k", "v")
+    val b = (1 to 50).map(j => (j % 97, j)).toDF("k", "w")
+    val df = a.join(broadcast(b), "k").groupBy("k").agg(sum($"v"))
+    df.collect()
+    val kinds = SessionHygiene.cleanerQueueKinds(spark)
+    assert(kinds.keySet.subsetOf(
+      Set("shuffle", "broadcast", "rdd", "accumulator", "checkpoint", "sparklistener")),
+      s"unknown kinds: $kinds")
+    assert(kinds.getOrElse("shuffle", 0L) >= 1 && kinds.getOrElse("broadcast", 0L) >= 1,
+      s"live shuffle and broadcast not counted: $kinds")
+    assert(kinds.values.forall(_ > 0))
+    assert(df.queryExecution.executedPlan != null)
+  }
 }

@@ -29,12 +29,19 @@ object SparkTestSession {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      var last = -1
-      var waited = 0
-      while (last != jobs.get() && waited < 25) {
-        last = jobs.get(); Thread.sleep(200); waited += 1
-      }
+      settle(jobs.get())
       jobs.get()
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Waits (up to 5 s) until `count`, fed by an asynchronous listener,
+    * stays the same for 200 ms.
+    */
+  def settle(count: => Int): Unit = {
+    var last = -1
+    var waited = 0
+    while (last != count && waited < 25) {
+      last = count; Thread.sleep(200); waited += 1
+    }
   }
 }

@@ -65,7 +65,7 @@ class TextFunctionsSpec extends AnyFunSuite {
       .unionByName(Seq("the der", "le el 的", "is est es y", "").toDF("text"))
     val diff = docs.select(
         langIdHeuristic(col("text")).as("compiled"),
-        langIdHeuristicComposable(col("text")).as("composable"))
+        ReferenceTwins.langIdHeuristicComposable(col("text")).as("composable"))
       .filter(not(col("compiled") <=> col("composable")))
       .count()
     assert(diff == 0)
