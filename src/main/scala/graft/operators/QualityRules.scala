@@ -90,61 +90,11 @@ object QualityRules {
   //    len(joined toks), clamped at 1.0 (overlapping occurrences are
   //    summed, not position-deduped — the common open-source
   //    approximation of the paper's char-coverage measure)
-  // Every signal is a sort + ONE run-length fold over a per-row array —
-  // a narrow projection, no shuffle, scan speed at any scale. Ratios
-  // are int/int IEEE divisions (bit-identical across engines, no
-  // rounding needed on the oracle surface).
-
-  /** Σ over distinct values of a sorted array: `(freq−1)·len` (dupOnly
-    * extra copies) or `freq·len` gated on freq>1 (all duplicated
-    * copies) — one run-length pass.
-    */
-  private def dupCharSum(sorted: Column, countAll: Boolean): Column = {
-    // "" is a safe no-previous sentinel: callers filter empty strings
-    def close(st: Column): Column =
-      when(st.getField("run") > 1,
-        (if (countAll) st.getField("run") else st.getField("run") - 1) *
-          length(st.getField("prev")).cast("long"))
-        .otherwise(lit(0L))
-    val st0 = struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("acc"))
-    aggregate(sorted, st0,
-      (st, x) =>
-        when(st.getField("run") === 0 || x =!= st.getField("prev"),
-          struct(x.as("prev"), lit(1L).as("run"),
-            (st.getField("acc") + close(st)).as("acc")))
-          .otherwise(struct(st.getField("prev").as("prev"),
-            (st.getField("run") + 1).as("run"),
-            st.getField("acc").as("acc"))),
-      st => st.getField("acc") + close(st))
-  }
-
-  /** (max frequency · gram length) of the most frequent gram, ties to
-    * the lexicographically smallest (= first max run in sorted order).
-    */
-  private def topGramChars(sorted: Column): Column = {
-    // per-FIELD closes: each is one cheap long comparison over struct
-    // reads — a struct-valued close referenced twice would duplicate the
-    // whole conditional struct build per fold step
-    def closedBestRun(st: Column): Column =
-      when(st.getField("run") > st.getField("bestRun"), st.getField("run"))
-        .otherwise(st.getField("bestRun"))
-    def closedBestGram(st: Column): Column =
-      when(st.getField("run") > st.getField("bestRun"), st.getField("prev"))
-        .otherwise(st.getField("bestGram"))
-    val st0 = struct(lit("").as("prev"), lit(0L).as("run"),
-      lit(0L).as("bestRun"), lit("").as("bestGram"))
-    aggregate(sorted, st0,
-      (st, x) =>
-        when(st.getField("run") === 0 || x =!= st.getField("prev"),
-          struct(x.as("prev"), lit(1L).as("run"),
-            closedBestRun(st).as("bestRun"),
-            closedBestGram(st).as("bestGram")))
-          .otherwise(struct(st.getField("prev").as("prev"),
-            (st.getField("run") + 1).as("run"),
-            st.getField("bestRun").as("bestRun"),
-            st.getField("bestGram").as("bestGram"))),
-      st => closedBestRun(st) * length(closedBestGram(st)).cast("long"))
-  }
+  // One compiled pass per row gathers every measure — a narrow
+  // projection, no shuffle, scan speed at any scale. Ratios are int/int
+  // IEEE divisions (bit-identical across engines, no rounding needed on
+  // the oracle surface). The sort + run-length-fold form is
+  // graft.ReferenceTwins.repetitionSignalsHof, in the tests.
 
   /** The repetition signal block: (n_lines, dup_line_frac,
     * dup_line_char_frac, top_gram_char_frac, dup_gram_char_frac,
@@ -162,8 +112,9 @@ object QualityRules {
     // the compiled one-pass kernel gathers the integer measures; the
     // fraction ARITHMETIC stays in the Column layer so the divisions are
     // the same IEEE expressions the q203 oracle replays (155.6 → 9.8 s
-    // over 10M docs, 15.9×; the HOF form below remains the composable
-    // reference, equivalence spec-pinned)
+    // over 10M docs, 15.9×; the HOF form, ReferenceTwins
+    // .repetitionSignalsHof, remains the composable reference, equivalence
+    // spec-pinned)
     val st = graft.functions.RepetitionCharStats.expr(
       struct(textCol, linesCol), topGramN, dupGramN)
     val r = col("__r")
@@ -195,68 +146,6 @@ object QualityRules {
           dupLineCharFrac <= maxDupLineCharFrac &&
           topFrac <= maxTopGramCharFrac &&
           dupGramFrac <= maxDupGramCharFrac).as("keep_repetition"))
-  }
-
-  /** The composable HOF form of [[repetitionSignals]] (sort + run-length
-    * folds) — the reference implementation the kernel is spec-pinned
-    * against, and the fallback if a caller needs pure built-ins.
-    */
-  private[graft] def repetitionSignalsHof(
-      df: DataFrame, idCol: Column, textCol: Column, linesCol: Column,
-      topGramN: Int = 2, dupGramN: Int = 5,
-      maxDupLineFrac: Double = 0.30, maxDupLineCharFrac: Double = 0.20,
-      maxTopGramCharFrac: Double = 0.20,
-      maxDupGramCharFrac: Double = 0.15): DataFrame = {
-    import TextFunctions.bindOnce
-    // bind every shared array once (r8 lesson): lines/toks/grams are
-    // referenced from several when() branches, which are excluded from
-    // codegen subexpression elimination — unbound, each signal would
-    // re-run the line filter / tokenization per reference
-    val sig = bindOnce(
-      filter(transform(linesCol, l => trim(l)), l => l =!= "")) { lines =>
-      bindOnce(length(array_join(TextFunctions.tokens(textCol), " "))
-        .cast("long")) { joinedLen =>
-        val nLines = size(lines)
-        val lineChars = aggregate(lines, lit(0L),
-          (a, l) => a + length(l).cast("long"))
-        val dupLineFrac = when(nLines === 0, lit(0.0))
-          .otherwise((nLines - size(array_distinct(lines))).cast("double") / nLines)
-        val dupLineCharFrac = when(lineChars === 0, lit(0.0))
-          .otherwise(dupCharSum(sort_array(lines), countAll = false)
-            .cast("double") / lineChars)
-        val topFrac = bindOnce(
-          sort_array(TextFunctions.shingles(textCol, topGramN))) { topGrams =>
-          when(size(topGrams) === 0 || joinedLen === 0, lit(0.0))
-            .otherwise(topGramChars(topGrams).cast("double") / joinedLen)
-        }
-        val dupGramFrac = bindOnce(
-          sort_array(TextFunctions.shingles(textCol, dupGramN))) { dupGrams =>
-          when(size(dupGrams) === 0 || joinedLen === 0, lit(0.0))
-            .otherwise(least(lit(1.0),
-              dupCharSum(dupGrams, countAll = true).cast("double") / joinedLen))
-        }
-        struct(
-          nLines.cast("int").as("n_lines"),
-          dupLineFrac.as("dup_line_frac"),
-          dupLineCharFrac.as("dup_line_char_frac"),
-          topFrac.as("top_gram_char_frac"),
-          dupGramFrac.as("dup_gram_char_frac"),
-          (dupLineFrac <= maxDupLineFrac &&
-            dupLineCharFrac <= maxDupLineCharFrac &&
-            topFrac <= maxTopGramCharFrac &&
-            dupGramFrac <= maxDupGramCharFrac).as("keep_repetition"))
-      }
-    }
-    // two projects on purpose: CollapseProject declines to merge them
-    // (the struct is non-cheap and referenced per field), so the signal
-    // block evaluates once and the field reads are free
-    df.select(idCol.as("id"), sig.as("__sig"))
-      .select(col("id"), col("__sig.n_lines").as("n_lines"),
-        col("__sig.dup_line_frac").as("dup_line_frac"),
-        col("__sig.dup_line_char_frac").as("dup_line_char_frac"),
-        col("__sig.top_gram_char_frac").as("top_gram_char_frac"),
-        col("__sig.dup_gram_char_frac").as("dup_gram_char_frac"),
-        col("__sig.keep_repetition").as("keep_repetition"))
   }
 
   /** Line-level policy phrases C4 drops (Raffel et al. 2020 §2.2: the

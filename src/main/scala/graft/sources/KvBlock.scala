@@ -43,14 +43,25 @@ object KvBlock {
       .withColumn("kv", parseBlock(col("block")))
   }
 
+  /** Java's regex `\s`: the ASCII whitespace a block's edges are trimmed of. */
+  val BlockEdgeWhitespace = " \t\n\u000B\f\r"
+
   /** Explode a whole-file text column into trimmed, non-empty blocks,
-    * with the `carry` columns ahead of `block` on every row. Spark's
-    * `trim` strips spaces ONLY — newline edges around the block
-    * delimiter need the regex form.
+    * with the `carry` columns ahead of `block` on every row. Edges are
+    * trimmed of [[BlockEdgeWhitespace]] (newlines around the block
+    * delimiter included); other Unicode spaces such as U+3000 and U+00A0
+    * are kept.
+    *
+    * The earlier `^\s+|\s+$` regex trim differs on one shape of block: one
+    * that ends in whitespace and then a single U+0085, U+2028 or U+2029.
+    * The regex's `$` also matched before that final line terminator, so
+    * it dropped the whitespace; this trim keeps the block as it is.
+    * [[writePartitioned]] output never ends a block that way, but the
+    * external text files [[read]] and [[readPartitioned]] take can.
     */
   def blocksFromText(df: DataFrame, text: Column, carry: Seq[Column] = Nil): DataFrame =
     df.select(carry :+ explode(split(text, BlockDelimiter)).as("block"): _*)
-      .withColumn("block", regexp_replace(col("block"), "^\\s+|\\s+$", ""))
+      .withColumn("block", trim(col("block"), BlockEdgeWhitespace))
       .filter(length(col("block")) > 0)
 
   /** `键：值` lines → map<string,string>; first colon wins, both `：` and `:`
@@ -60,6 +71,24 @@ object KvBlock {
     * one malformed block never kills a job. See [[graft.functions.KvParse]].
     */
   def parseBlock(block: Column): Column = KvParse.expr(block)
+
+  /** `block` and the named `fields` (output name -> KV key) of its parse,
+    * one row per row of `df`, the block parsed once. The fields leave
+    * through a one-row generator, `inline(array(struct(block, fields…)))`:
+    * the optimizer pushes a filter through a projection by substituting
+    * the projected expressions into its condition, but never below a
+    * generator's output. So a filter on the fields reads the parsed
+    * values instead of parsing the block (and rendering it, if `block` is
+    * a render) again per row. The generator stays in whole-stage codegen.
+    */
+  def parseFields(df: DataFrame, block: Column, fields: Seq[(String, String)]): DataFrame = {
+    val kv = col("kv")
+    df.select(block.as("block"))
+      .withColumn("kv", parseBlock(col("block")))
+      .select(inline(array(struct(col("block") +: fields.map { case (name, key) =>
+        field(kv, key).as(name)
+      }: _*))))
+  }
 
   /** Project typed columns out of the kv map with null-safe defaults (the
     * reference's dict.get(k, '') lookups).

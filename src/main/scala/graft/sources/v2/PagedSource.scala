@@ -3,6 +3,7 @@ package graft.sources.v2
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -539,6 +540,20 @@ class PagedReaderFactory(schema: StructType) extends PartitionReaderFactory {
 
 /** Deterministic stand-in for the HTTP page fetch, retry loop included
   * (fast_tuoyu_scraper.py:41-58: 3 attempts, linear backoff).
+  *
+  * Record `i` of page `p` has id `p * pageSize + i` (Int arithmetic) and
+  * four payload fields, produced straight as UTF-8 bytes (FIXTURES.md §1):
+  *
+  *  - `name` = `托育机构_` + the id in decimal;
+  *  - `credit_code` = `91` + the id zero-padded to 16 digits;
+  *  - `institution_type` = `营利性` when `id % 3 == 0`, else `非营利性`;
+  *  - `region_code` = `140000 + id % 1000` zero-padded to 6 digits, then
+  *    `000000`.
+  *
+  * A negative id (an overflowed `p * pageSize`) is written the way
+  * `java.util.Formatter` writes it: the sign, then the zero padding.
+  * Literal parts are encoded once; digits are written in place, so a page
+  * costs one byte buffer and one offset array.
   */
 object PageFetcher {
   val MaxRetries = 3
@@ -548,19 +563,41 @@ object PageFetcher {
     */
   val fetchCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def fetch(page: Int, pageSize: Int): Seq[(Int, String, String, String, String)] = {
+  /** Payload fields per record: `name`, `credit_code`,
+    * `institution_type`, `region_code`, in [[PagedSource.schema]] order.
+    */
+  private val FieldsPerRecord = 4
+
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val NamePrefix = utf8("托育机构_")
+  private val CreditPrefix = utf8("91")
+  private val RegionSuffix = utf8("000000")
+  private val ForProfit = utf8("营利性")
+  private val NonProfit = utf8("非营利性")
+  // longest record: prefix + "-2147483648" for the name, "91" + the same
+  // 11 bytes (padding to 16 takes fewer) for the code, the longer type,
+  // six digits + suffix for the region
+  private val MaxRecordBytes = NamePrefix.length + 11 + CreditPrefix.length + 16 +
+    math.max(ForProfit.length, NonProfit.length) + 6 + RegionSuffix.length
+
+  /** One fetched page of `size` records: payload field `f` of record `i`
+    * is the UTF-8 bytes `bytes[bounds(k), bounds(k + 1))`, `k = 4i + f`.
+    */
+  final class Page(val size: Int, bytes: Array[Byte], bounds: Array[Int]) {
+    /** The field as a UTF8String over the page's buffer (no copy). */
+    def field(i: Int, f: Int): UTF8String = {
+      val k = i * FieldsPerRecord + f
+      UTF8String.fromBytes(bytes, bounds(k), bounds(k + 1) - bounds(k))
+    }
+  }
+
+  def fetch(page: Int, pageSize: Int): Page = {
     fetchCount.incrementAndGet(): Unit
     var attempt = 0
     while (true) {
       try {
-        return (0 until pageSize).map { i =>
-          val id = page * pageSize + i
-          (i,
-            s"托育机构_${id}",
-            f"91${id}%016d",
-            if (id % 3 == 0) "营利性" else "非营利性",
-            f"${140000 + id % 1000}%06d000000")
-        }
+        return render(page, pageSize)
       } catch {
         case e: Exception =>
           attempt += 1
@@ -568,64 +605,113 @@ object PageFetcher {
           Thread.sleep(500L * attempt)   // 0.5·n backoff, reference policy
       }
     }
-    Seq.empty
+    throw new IllegalStateException("unreachable")
+  }
+
+  private def render(page: Int, pageSize: Int): Page = {
+    val bytes = new Array[Byte](Math.multiplyExact(pageSize, MaxRecordBytes))
+    val bounds = new Array[Int](pageSize * FieldsPerRecord + 1)
+    var pos = 0
+    var k = 1
+    var i = 0
+    while (i < pageSize) {
+      val id = page * pageSize + i
+      pos = put(bytes, pos, NamePrefix)
+      pos = putDecimal(bytes, pos, id, 0)
+      bounds(k) = pos; k += 1
+      pos = put(bytes, pos, CreditPrefix)
+      pos = putDecimal(bytes, pos, id, 16)
+      bounds(k) = pos; k += 1
+      pos = put(bytes, pos, if (id % 3 == 0) ForProfit else NonProfit)
+      bounds(k) = pos; k += 1
+      pos = putDecimal(bytes, pos, 140000 + id % 1000, 6)
+      pos = put(bytes, pos, RegionSuffix)
+      bounds(k) = pos; k += 1
+      i += 1
+    }
+    new Page(pageSize, bytes, bounds)
+  }
+
+  private def put(buf: Array[Byte], at: Int, src: Array[Byte]): Int = {
+    System.arraycopy(src, 0, buf, at, src.length)
+    at + src.length
+  }
+
+  /** `v` in decimal at `at`, zero-padded to `width` bytes with the sign
+    * counted in the width (`%0<width>d`); returns the end position.
+    */
+  private def putDecimal(buf: Array[Byte], at: Int, v: Int, width: Int): Int = {
+    var pos = at
+    if (v < 0) { buf(pos) = '-'; pos += 1 }
+    var m = math.abs(v.toLong)
+    var digits = 1
+    var t = m / 10
+    while (t != 0) { digits += 1; t /= 10 }
+    val end = math.max(pos + digits, at + width)
+    var j = end
+    while (j > end - digits) { j -= 1; buf(j) = ('0' + m % 10).toByte; m /= 10 }
+    while (j > pos) { j -= 1; buf(j) = '0' }
+    end
   }
 }
 
 /** Projection-aware page reader. The pruned schema decides what the
   * transport owes us:
   *
-  *  - any payload column required → one [[PageFetcher.fetch]] per page,
-  *    rows projected to the required fields in the required order;
+  *  - any payload column required → one [[PageFetcher.fetch]] per page;
   *  - keys-only (`page`/`idx`) or EMPTY projection → ZERO fetches: the
   *    row count per page and the (page, idx) keys are registry metadata
   *    (the same total-count metadata the aggregate pushdown answers
   *    from), so COUNT-shaped plans — where the optimizer prunes every
   *    column before aggregate pushdown can fire — never touch the
   *    transport at all.
+  *
+  * The schema is resolved to source-field ordinals once per reader. Every
+  * row is filled into one reused row by ordinal: `page` and `idx` as
+  * ints, payload fields as UTF8Strings over the fetched page's bytes (no
+  * String, no re-encode). The scan projects each row to an UnsafeRow
+  * before `next()` is called again.
   */
 class PagedReader(firstPage: Int, lastPage: Int, pageSize: Int,
     schema: StructType) extends PartitionReader[InternalRow] {
-  private val names: Array[String] = schema.fieldNames
-  private val needsFetch = names.exists(n => n != "page" && n != "idx")
-  private val emptyRow: InternalRow = InternalRow.empty
+  import PagedReader.{IdxField, PageField}
+  // source-field ordinal of each output column: page, idx, then the
+  // payload fields in PageFetcher order
+  private val sources: Array[Int] = schema.fieldNames.map(PagedSource.schema.fieldIndex)
+  private val needsFetch = sources.exists(_ > IdxField)
+  private val row: InternalRow =
+    if (sources.isEmpty) InternalRow.empty else new SpecificInternalRow(schema)
 
-  private val rows: Iterator[InternalRow] =
-    if (names.isEmpty) {
-      val n = (lastPage - firstPage + 1).toLong * pageSize
-      // one shared zero-field row: COUNT only observes cardinality
-      new Iterator[InternalRow] {
-        private var i = 0L
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { i += 1; emptyRow }
-      }
-    } else if (!needsFetch) {
-      (firstPage to lastPage).iterator.flatMap { p =>
-        (0 until pageSize).iterator.map { i =>
-          InternalRow.fromSeq(names.toSeq.map {
-            case "page" => p
-            case _ => i
-          })
-        }
-      }
-    } else {
-      (firstPage to lastPage).iterator.flatMap { p =>
-        PageFetcher.fetch(p, pageSize).iterator.map {
-          case (i, name, code, typ, region) =>
-            InternalRow.fromSeq(names.toSeq.map {
-              case "page" => p
-              case "idx" => i
-              case "name" => UTF8String.fromString(name)
-              case "credit_code" => UTF8String.fromString(code)
-              case "institution_type" => UTF8String.fromString(typ)
-              case "region_code" => UTF8String.fromString(region)
-            })
-        }
-      }
+  private var page = firstPage
+  private var i = -1
+  private var done = firstPage > lastPage || pageSize <= 0
+  private var fetched: PageFetcher.Page = _
+
+  override def next(): Boolean = {
+    if (done) return false
+    i += 1
+    if (i == pageSize) {
+      if (page == lastPage) { done = true; return false }
+      i = 0; page += 1
     }
+    if (i == 0 && needsFetch) fetched = PageFetcher.fetch(page, pageSize)
+    var j = 0
+    while (j < sources.length) {
+      sources(j) match {
+        case PageField => row.setInt(j, page)
+        case IdxField => row.setInt(j, i)
+        case f => row.update(j, fetched.field(i, f - IdxField - 1))
+      }
+      j += 1
+    }
+    true
+  }
 
-  private var current: InternalRow = _
-  override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
-  override def get(): InternalRow = current
+  override def get(): InternalRow = row
   override def close(): Unit = ()
+}
+
+object PagedReader {
+  private final val PageField = 0
+  private final val IdxField = 1
 }

@@ -129,4 +129,45 @@ class KvParseSpec extends AnyFunSuite {
       assert(entries == Seq("机构名称" -> "新名", "备注" -> "a"))
     } finally spark.conf.set(key, before)
   }
+
+  test("block edges trim exactly what the \\s regex trimmed; U+3000 and U+00A0 stay") {
+    val ascii = KvBlock.BlockEdgeWhitespace.map(_.toString)
+    val all = ascii ++ Seq("\u3000", "\u00A0")
+    val body = "机构名称：a b\n区域编号：\t14"
+    val edged = all.flatMap(c => Seq(c + body, body + c, c + body + c,
+      c * 3 + body + c * 2, c, c * 2))
+    val rnd = new scala.util.Random(83L)
+    val alphabet = all ++ Seq("k", "：", "^", "_", "v")
+    val random = Seq.fill(600)(Seq.fill(rnd.nextInt(12))(
+      alphabet(rnd.nextInt(alphabet.size))).mkString)
+    val text = (edged ++ random).toDF("t")
+    // as blocksFromText splits and trims: each chunk against the twin
+    val both = text.select(explode(split(col("t"), KvBlock.BlockDelimiter)).as("b"))
+      .select(hex(col("b")).as("hex"),
+        trim(col("b"), KvBlock.BlockEdgeWhitespace).as("kernel"),
+        ReferenceTwins.blockTrimRegex(col("b")).as("twin"))
+    val bad = both.filter(not(col("kernel") <=> col("twin"))).collect()
+    assert(bad.isEmpty, bad.take(3).mkString("; "))
+    // the wide spaces are content, not edges
+    val kept = Seq("\u3000" + body, body + "\u00A0").toDF("t")
+    assert(KvBlock.blocksFromText(kept, col("t")).select("block").as[String].collect().toSeq ==
+      Seq("\u3000" + body, body + "\u00A0"))
+    // and the blocks blocksFromText keeps are the twin's, non-empty ones
+    val twinBlocks = text.select(explode(split(col("t"), KvBlock.BlockDelimiter)).as("b"))
+      .select(ReferenceTwins.blockTrimRegex(col("b")).as("block"))
+      .filter(length(col("block")) > 0).as[String].collect().toSeq
+    assert(KvBlock.blocksFromText(text, col("t")).select("block").as[String]
+      .collect().toSeq == twinBlocks)
+    assert(twinBlocks.nonEmpty)
+  }
+
+  test("the one input the trims part on: whitespace before a final Unicode line terminator") {
+    Seq("\u0085", "\u2028", "\u2029").foreach { lt =>
+      val r = Seq("k：v \t" + lt).toDF("b").select(
+        trim(col("b"), KvBlock.BlockEdgeWhitespace),
+        ReferenceTwins.blockTrimRegex(col("b"))).head()
+      assert(r.getString(0) == "k：v \t" + lt)   // an inner run, kept
+      assert(r.getString(1) == "k：v" + lt)       // the regex's `$` quirk
+    }
+  }
 }

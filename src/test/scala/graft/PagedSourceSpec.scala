@@ -335,4 +335,68 @@ class PagedSourceSpec extends AnyFunSuite {
       assert(batches.length >= 4)   // ceil(10/3) batches with data
     } finally q.stop()
   }
+
+  /** Every field of every record of the page, fetched and formatted by the
+    * twin, byte for byte.
+    */
+  private def assertFetchMatchesTwin(page: Int, pageSize: Int): Unit = {
+    import graft.sources.v2.PageFetcher
+    val got = PageFetcher.fetch(page, pageSize)
+    val want = ReferenceTwins.pageFetchFormatted(page, pageSize)
+    assert(got.size == want.size)
+    want.foreach { case (i, name, code, typ, region) =>
+      Seq(name, code, typ, region).zipWithIndex.foreach { case (w, f) =>
+        val bytes = got.field(i, f).getBytes
+        assert(bytes.sameElements(w.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
+          s"page $page x $pageSize, record $i, field $f: " +
+            s"'${new String(bytes, "UTF-8")}' != '$w'")
+      }
+    }
+  }
+
+  test("fetch writes the formatted fields byte for byte: every digit-width " +
+      "boundary, Int.MaxValue, negative ids and a random sweep") {
+    val boundaries = (0 to 9).map(k => math.pow(10, k).toInt)
+    val ids = (Seq(0, Int.MaxValue, Int.MinValue, -1) ++
+      boundaries.flatMap(b => Seq(b - 1, b, -b))).distinct
+    ids.foreach(id => assertFetchMatchesTwin(id, 1))
+    // the pages of 10 on either side of each boundary, and the last page
+    // of 10 below Int.MaxValue with the 8 records that still fit
+    boundaries.foreach { b =>
+      assertFetchMatchesTwin(b / 10 - 1, 10); assertFetchMatchesTwin(b / 10, 10)
+    }
+    assertFetchMatchesTwin(Int.MaxValue / 10, 8)
+    assert((Int.MaxValue / 10) * 10 + 7 == Int.MaxValue)
+    val rnd = new scala.util.Random(20261020L)
+    (1 to 2000).foreach(_ => assertFetchMatchesTwin(rnd.nextInt(), 1))
+    (1 to 300).foreach { _ =>
+      val size = 1 + rnd.nextInt(50)
+      assertFetchMatchesTwin(rnd.nextInt(Int.MaxValue / size), size)
+    }
+    // empty pages hold no records
+    assert(graft.sources.v2.PageFetcher.fetch(7, 0).size == 0)
+  }
+
+  test("reader rows equal the name-matching twin's for every subset and " +
+      "order of the six columns, keys-only and empty included") {
+    import graft.sources.v2.{PagedReader, PagedSource}
+    import org.apache.spark.sql.types.StructType
+    val fields = PagedSource.schema.fields.toSeq
+    val schemas = (0 to fields.size).flatMap(k =>
+      fields.combinations(k).flatMap(_.permutations)).map(StructType(_))
+    assert(schemas.size == 1957)   // sum over k of 6!/(6-k)!
+    def readAll(r: PagedReader, schema: StructType): Seq[Seq[Any]] = {
+      val out = Seq.newBuilder[Seq[Any]]
+      while (r.next()) out += r.get().toSeq(schema)
+      r.close()
+      out.result()
+    }
+    for (schema <- schemas; (first, last, size) <-
+        Seq((3, 5, 4), (0, 2, 1), (4, 3, 5), (Int.MaxValue - 1, Int.MaxValue, 2))) {
+      val got = readAll(new PagedReader(first, last, size, schema), schema)
+      val want = ReferenceTwins.pagedReaderRows(first, last, size, schema)
+        .map(_.toSeq(schema)).toSeq
+      assert(got == want, s"cols=${schema.fieldNames.mkString(",")} pages $first..$last x $size")
+    }
+  }
 }

@@ -177,4 +177,34 @@ class PlanGuardSpec extends AnyFunSuite {
       }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
   }
+
+  test("the corpus pipeline renders and parses each block once: its rule " +
+      "filter reads parsed fields") {
+    import graft.functions.{KvParse, KvRender}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    graft.core.CodegenFallbacks.install()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val out = java.nio.file.Files.createTempDirectory("plan_guard_corpus_once")
+    try {
+      val (plans, fallbacks) = graft.core.CodegenFallbacks.during(
+        plansDuring(Bench.corpusPipeline(spark, out.toString): Unit)
+          .filter(p => helper.find(p)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty))
+      assert(fallbacks == 0, s"$fallbacks codegen fallbacks")
+      assert(plans.size == 1, s"${plans.size} write plans captured")
+      val plan = plans.head
+      val exprs = helper.flatMap(plan)(_.expressions.flatMap(_.collect { case e => e }))
+      val renders = exprs.count(_.isInstanceOf[KvRender])
+      val parses = exprs.count(_.isInstanceOf[KvParse])
+      assert(renders == 1 && parses == 1,
+        s"$renders kv_render and $parses kv_parse in the write plan:\n$plan")
+      val filters = helper.collect(plan) { case f: FilterExec => f }
+      assert(filters.nonEmpty, s"no rule filter in the write plan:\n$plan")
+      filters.foreach { f =>
+        assert(!f.condition.exists(e => e.isInstanceOf[KvRender] || e.isInstanceOf[KvParse]),
+          s"the filter re-runs a kernel: ${f.condition}")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
+  }
 }

@@ -191,7 +191,7 @@ class QualityRulesSpec extends AnyFunSuite {
     val kernel = QualityRules.repetitionSignals(
         docs, col("doc_id"), col("__t"), col("__l"))
       .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
-    val hof = QualityRules.repetitionSignalsHof(
+    val hof = ReferenceTwins.repetitionSignalsHof(
         docs, col("doc_id"), col("__t"), col("__l"))
       .select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
     assert(kernel == hof)

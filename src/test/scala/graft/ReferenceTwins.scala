@@ -30,6 +30,15 @@ object ReferenceTwins {
         trim(regexp_extract(l, "^([^：:]*)[：:]", 1)).as("key"),
         trim(regexp_replace(l, "^[^：:]*[：:]", "")).as("value"))))
 
+  /** [[graft.sources.KvBlock.blocksFromText]]'s edge trim as the regex it
+    * replaced: leading and trailing runs of `\s` removed. The one input
+    * they part on: a block ending in whitespace and then one Unicode line
+    * terminator (U+0085, U+2028, U+2029), where the regex's `$` also
+    * matches before that terminator and drops the whitespace.
+    */
+  def blockTrimRegex(block: Column): Column =
+    regexp_replace(block, "^\\s+|\\s+$", "")
+
   /** [[graft.sources.KvBlock.renderBlock]] as built-in expressions: one
     * `k：v` line per pair joined by `\n`, each value's `\r\n`, `\n`, `\r`
     * and `^_^` replaced by a space; a null value drops its line.
@@ -39,6 +48,60 @@ object ReferenceTwins {
     concat_ws("\n", kvPairs.map { case (k, v) =>
       concat(lit(k), lit("："), regexp_replace(v, "\\r?\\n|\\r|\\^_\\^", " "))
     }: _*)
+
+  /** [[graft.sources.v2.PageFetcher.fetch]]'s records as the formatted
+    * strings it used to build: `(idx, name, credit_code,
+    * institution_type, region_code)` per record. The fetch must match it
+    * byte for byte.
+    */
+  def pageFetchFormatted(page: Int, pageSize: Int)
+      : Seq[(Int, String, String, String, String)] =
+    (0 until pageSize).map { i =>
+      val id = page * pageSize + i
+      (i,
+        s"托育机构_${id}",
+        f"91${id}%016d",
+        if (id % 3 == 0) "营利性" else "非营利性",
+        f"${140000 + id % 1000}%06d000000")
+    }
+
+  /** [[graft.sources.v2.PagedReader]]'s rows built by matching each
+    * pruned column's name, from [[pageFetchFormatted]]. Keys-only and
+    * empty projections fetch nothing.
+    */
+  def pagedReaderRows(firstPage: Int, lastPage: Int, pageSize: Int,
+      schema: org.apache.spark.sql.types.StructType)
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val names = schema.fieldNames.toSeq
+    if (names.isEmpty) {
+      Iterator.fill((lastPage - firstPage + 1) * pageSize)(InternalRow.empty)
+    } else if (names.forall(n => n == "page" || n == "idx")) {
+      (firstPage to lastPage).iterator.flatMap { p =>
+        (0 until pageSize).iterator.map { i =>
+          InternalRow.fromSeq(names.map {
+            case "page" => p
+            case _ => i
+          })
+        }
+      }
+    } else {
+      (firstPage to lastPage).iterator.flatMap { p =>
+        pageFetchFormatted(p, pageSize).iterator.map {
+          case (i, name, code, typ, region) =>
+            InternalRow.fromSeq(names.map {
+              case "page" => p
+              case "idx" => i
+              case "name" => UTF8String.fromString(name)
+              case "credit_code" => UTF8String.fromString(code)
+              case "institution_type" => UTF8String.fromString(typ)
+              case "region_code" => UTF8String.fromString(region)
+            })
+        }
+      }
+    }
+  }
 
   /** Distinct shingle poly-hashes via the readable HOF pipeline: shingle
     * strings → per-string char fold → value-dedup (first-occurrence order,
@@ -183,6 +246,119 @@ object ReferenceTwins {
     graph.filter(col("b").isNull).select(col("token"), col("a").as("id"))
       .join(scores, Seq("id"), "left")
       .select(col("token"), coalesce(col("rank_fp"), lit(base)).as("rank_fp"))
+  }
+
+  /** [[graft.operators.QualityRules.repetitionSignals]] as the HOF form
+    * it replaced: each signal a sort + one run-length fold over a per-row
+    * array. The kernel must match it bit for bit.
+    */
+  def repetitionSignalsHof(
+      df: DataFrame, idCol: Column, textCol: Column, linesCol: Column,
+      topGramN: Int = 2, dupGramN: Int = 5,
+      maxDupLineFrac: Double = 0.30, maxDupLineCharFrac: Double = 0.20,
+      maxTopGramCharFrac: Double = 0.20,
+      maxDupGramCharFrac: Double = 0.15): DataFrame = {
+    import TextFunctions.bindOnce
+    // bind every shared array once (r8 lesson): lines/toks/grams are
+    // referenced from several when() branches, which are excluded from
+    // codegen subexpression elimination — unbound, each signal would
+    // re-run the line filter / tokenization per reference
+    val sig = bindOnce(
+      filter(transform(linesCol, l => trim(l)), l => l =!= "")) { lines =>
+      bindOnce(length(array_join(TextFunctions.tokens(textCol), " "))
+        .cast("long")) { joinedLen =>
+        val nLines = size(lines)
+        val lineChars = aggregate(lines, lit(0L),
+          (a, l) => a + length(l).cast("long"))
+        val dupLineFrac = when(nLines === 0, lit(0.0))
+          .otherwise((nLines - size(array_distinct(lines))).cast("double") / nLines)
+        val dupLineCharFrac = when(lineChars === 0, lit(0.0))
+          .otherwise(dupCharSum(sort_array(lines), countAll = false)
+            .cast("double") / lineChars)
+        val topFrac = bindOnce(
+          sort_array(TextFunctions.shingles(textCol, topGramN))) { topGrams =>
+          when(size(topGrams) === 0 || joinedLen === 0, lit(0.0))
+            .otherwise(topGramChars(topGrams).cast("double") / joinedLen)
+        }
+        val dupGramFrac = bindOnce(
+          sort_array(TextFunctions.shingles(textCol, dupGramN))) { dupGrams =>
+          when(size(dupGrams) === 0 || joinedLen === 0, lit(0.0))
+            .otherwise(least(lit(1.0),
+              dupCharSum(dupGrams, countAll = true).cast("double") / joinedLen))
+        }
+        struct(
+          nLines.cast("int").as("n_lines"),
+          dupLineFrac.as("dup_line_frac"),
+          dupLineCharFrac.as("dup_line_char_frac"),
+          topFrac.as("top_gram_char_frac"),
+          dupGramFrac.as("dup_gram_char_frac"),
+          (dupLineFrac <= maxDupLineFrac &&
+            dupLineCharFrac <= maxDupLineCharFrac &&
+            topFrac <= maxTopGramCharFrac &&
+            dupGramFrac <= maxDupGramCharFrac).as("keep_repetition"))
+      }
+    }
+    // two projects on purpose: CollapseProject declines to merge them
+    // (the struct is non-cheap and referenced per field), so the signal
+    // block evaluates once and the field reads are free
+    df.select(idCol.as("id"), sig.as("__sig"))
+      .select(col("id"), col("__sig.n_lines").as("n_lines"),
+        col("__sig.dup_line_frac").as("dup_line_frac"),
+        col("__sig.dup_line_char_frac").as("dup_line_char_frac"),
+        col("__sig.top_gram_char_frac").as("top_gram_char_frac"),
+        col("__sig.dup_gram_char_frac").as("dup_gram_char_frac"),
+        col("__sig.keep_repetition").as("keep_repetition"))
+  }
+
+  /** Σ over distinct values of a sorted array: `(freq−1)·len` (dupOnly
+    * extra copies) or `freq·len` gated on freq>1 (all duplicated
+    * copies) — one run-length pass.
+    */
+  private def dupCharSum(sorted: Column, countAll: Boolean): Column = {
+    // "" is a safe no-previous sentinel: callers filter empty strings
+    def close(st: Column): Column =
+      when(st.getField("run") > 1,
+        (if (countAll) st.getField("run") else st.getField("run") - 1) *
+          length(st.getField("prev")).cast("long"))
+        .otherwise(lit(0L))
+    val st0 = struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("acc"))
+    aggregate(sorted, st0,
+      (st, x) =>
+        when(st.getField("run") === 0 || x =!= st.getField("prev"),
+          struct(x.as("prev"), lit(1L).as("run"),
+            (st.getField("acc") + close(st)).as("acc")))
+          .otherwise(struct(st.getField("prev").as("prev"),
+            (st.getField("run") + 1).as("run"),
+            st.getField("acc").as("acc"))),
+      st => st.getField("acc") + close(st))
+  }
+
+  /** (max frequency · gram length) of the most frequent gram, ties to
+    * the lexicographically smallest (= first max run in sorted order).
+    */
+  private def topGramChars(sorted: Column): Column = {
+    // per-FIELD closes: each is one cheap long comparison over struct
+    // reads — a struct-valued close referenced twice would duplicate the
+    // whole conditional struct build per fold step
+    def closedBestRun(st: Column): Column =
+      when(st.getField("run") > st.getField("bestRun"), st.getField("run"))
+        .otherwise(st.getField("bestRun"))
+    def closedBestGram(st: Column): Column =
+      when(st.getField("run") > st.getField("bestRun"), st.getField("prev"))
+        .otherwise(st.getField("bestGram"))
+    val st0 = struct(lit("").as("prev"), lit(0L).as("run"),
+      lit(0L).as("bestRun"), lit("").as("bestGram"))
+    aggregate(sorted, st0,
+      (st, x) =>
+        when(st.getField("run") === 0 || x =!= st.getField("prev"),
+          struct(x.as("prev"), lit(1L).as("run"),
+            closedBestRun(st).as("bestRun"),
+            closedBestGram(st).as("bestGram")))
+          .otherwise(struct(st.getField("prev").as("prev"),
+            (st.getField("run") + 1).as("run"),
+            st.getField("bestRun").as("bestRun"),
+            st.getField("bestGram").as("bestGram"))),
+      st => closedBestRun(st) * length(closedBestGram(st)).cast("long"))
   }
 
   /** [[graft.functions.QDigestCompress.compressSorted]] as the map walk it
